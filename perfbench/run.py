@@ -54,7 +54,7 @@ CORES = 4
 #: ``--seconds`` is.  Pass times still fall for a minute or more after the
 #: cold pass (JIT), so a fixed pass count keeps runs at the same point of
 #: that curve; it must leave TAIL_BEYOND samples above the tail.
-MIN_SAMPLES = 20
+MIN_SAMPLES = 15
 TAIL_BEYOND = 10
 
 
@@ -233,10 +233,11 @@ class Bench:
         min_passes = math.ceil(MIN_SAMPLES / len(self.names))
         start = time.perf_counter()
         while len(passes) < min_passes or time.perf_counter() - start < self.args.seconds:
-            # traced, untraced, untraced, traced, ...: pass times still fall
-            # from pass to pass, and this order balances that trend between
-            # the two sides of trace.overhead
-            traced = tracing is not None and len(passes) % 4 in (0, 3)
+            # untraced and traced passes alternate, starting untraced: pass
+            # times still fall from pass to pass, and with the odd pass counts
+            # of the workloads both sides of trace.overhead sit at the same
+            # mean position on that curve
+            traced = tracing is not None and len(passes) % 2 == 1
             if traced:
                 tracing.enable()
             elif tracing is not None:
@@ -245,9 +246,9 @@ class Bench:
 
         samples = [s for p in passes for s in p["walls"].values()]
         n0 = min_passes * len(self.names)
-        q = (n0 - TAIL_BEYOND) / n0
-        rank = max(0, math.ceil(q * len(samples)) - 1)
-        self.info["tail"] = f"p{100 * q:.0f} of {len(samples)} samples"
+        above = n0 - TAIL_BEYOND
+        rank = max(0, -(-above * len(samples) // n0) - 1)  # ceil, in integers
+        self.info["tail"] = f"p{100 * above / n0:.0f} of {len(samples)} samples"
         self.info["warm_passes_s"] = [round(sum(p["walls"].values()), 3) for p in passes]
         out = {
             "warmup_s": warmup,
