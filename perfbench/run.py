@@ -3,15 +3,17 @@
 One closed-loop client in one process runs one query at a time on a
 ``local[4]`` session: ``get_session()``, then ``queries()[name](spark,
 sf_dir)``, then a noop sink, with ``spark.catalog.clearCache()`` outside
-the timer.  Inputs are generated from ``--seed`` (see ``datagen``); the seed
-also permutes the query order of every pass.
+the timer.  Inputs are generated from one fixed data seed (see ``datagen``);
+``--seed`` only permutes the query order of every pass.
 
     python3 perfbench/run.py --workload tpch_relational --seed 1 --seconds 10 --trace 0
 
-``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs with Spark's
-event log and a stream listener on, alternating traced and untraced warm
-passes, and prints the per-layer metrics.  The last stdout line is one JSON
-object; see README.md in this directory.
+``--seconds`` is accepted for the command line, but a run always times the
+same number of passes.  ``--trace 0`` prints the end-to-end metrics;
+``--trace 1`` runs with Spark's event log and a stream listener on,
+alternating traced and untraced warm passes, and prints the per-layer
+metrics.  The last stdout line is one JSON object; see README.md in this
+directory.
 """
 
 from __future__ import annotations
@@ -50,12 +52,14 @@ WORKLOADS = {
     ],
 }
 CORES = 4
-#: Timed query executions every run makes, in whole passes, however short
-#: ``--seconds`` is.  Pass times still fall for a minute or more after the
-#: cold pass (JIT), so a fixed pass count keeps runs at the same point of
-#: that curve; it must leave TAIL_BEYOND samples above the tail.
-MIN_SAMPLES = 15
-TAIL_BEYOND = 10
+#: Warm passes every run times, whatever ``--seconds`` is.  Pass times still
+#: fall for a minute or more after the cold pass (JIT), so a fixed pass
+#: count keeps every run, and a faster program, at the same point of that
+#: curve.  Odd counts balance traced and untraced passes (see ``_measure``).
+PASSES = {"tpch_relational": 3, "corpus_text": 5, "stream_drains": 5}
+#: Seed of the generated tables.  It is fixed so that run-to-run spread is
+#: noise of the host and the program, not of the data.
+DATA_SEED = 42
 
 
 def parse_args(argv):
@@ -117,7 +121,7 @@ class Oracle:
 
 class Bench:
     """One benchmark run: set-up, a cold pass with the correctness gate,
-    then warm passes for at least ``seconds``."""
+    then a fixed number of warm passes."""
 
     def __init__(self, args, run_dir: str, data_dir: str, tables: list[str]) -> None:
         self.args = args
@@ -143,12 +147,12 @@ class Bench:
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": os.path.join(self.run_dir, "local"),
             "spark.sql.warehouse.dir": os.path.join(self.run_dir, "warehouse"),
-            # A fixed, pre-touched heap: peak memory then varies with what the
-            # program holds outside it (Python workers, Arrow and direct
-            # buffers), not with when the collector grew or touched the heap.
-            # No hsperfdata file in /tmp.
+            # The serial collector grows the heap by occupancy alone, not by
+            # GC time as G1 does, so peak memory follows what the program
+            # holds rather than how busy the host was.  No hsperfdata file
+            # in /tmp.
             "spark.driver.extraJavaOptions": (
-                f"-Xms{heap_gb}g -XX:+AlwaysPreTouch -XX:-UsePerfData "
+                "-XX:+UseSerialGC -XX:-UsePerfData "
                 f"-Djava.io.tmpdir={os.path.join(self.run_dir, 'tmp')}"
             ),
         }
@@ -230,14 +234,12 @@ class Bench:
             oracle.close()
 
         passes: list[dict] = []
-        min_passes = math.ceil(MIN_SAMPLES / len(self.names))
-        start = time.perf_counter()
-        while len(passes) < min_passes or time.perf_counter() - start < self.args.seconds:
+        for i in range(PASSES[self.args.workload]):
             # untraced and traced passes alternate, starting untraced: pass
             # times still fall from pass to pass, and with the odd pass counts
             # of the workloads both sides of trace.overhead sit at the same
             # mean position on that curve
-            traced = tracing is not None and len(passes) % 2 == 1
+            traced = tracing is not None and i % 2 == 1
             if traced:
                 tracing.enable()
             elif tracing is not None:
@@ -245,16 +247,19 @@ class Bench:
             passes.append(self._pass(spark, queries, tracing if traced else None))
 
         samples = [s for p in passes for s in p["walls"].values()]
-        n0 = min_passes * len(self.names)
-        above = n0 - TAIL_BEYOND
-        rank = max(0, -(-above * len(samples) // n0) - 1)  # ceil, in integers
-        self.info["tail"] = f"p{100 * above / n0:.0f} of {len(samples)} samples"
+        walls_of: dict[str, list[float]] = {}
+        for p in passes:
+            for name, wall in p["walls"].items():
+                walls_of.setdefault(name, []).append(wall)
+        per_query = {name: statistics.median(walls) for name, walls in walls_of.items()}
+        slowest = max(per_query, key=per_query.get)
+        self.info["tail"] = f"{slowest}, median of {len(passes)} passes"
         self.info["warm_passes_s"] = [round(sum(p["walls"].values()), 3) for p in passes]
         out = {
             "warmup_s": warmup,
             "pass_s": statistics.median(sum(p["walls"].values()) for p in passes),
             "query_p50_s": statistics.median(samples),
-            "query_tail_s": sorted(samples)[rank],
+            "query_tail_s": per_query[slowest],
         }
         if tracing is not None:
             tracing.enable()
@@ -368,7 +373,7 @@ def main(argv=None) -> int:
         from probes import RssSampler
 
         data_dir = os.path.join(run_dir, "data")
-        tables = datagen.generate(data_dir, args.seed)
+        tables = datagen.generate(data_dir, DATA_SEED)
         bench = Bench(args, run_dir, data_dir, tables)
         with RssSampler() as rss:
             e2e = bench.run()
