@@ -1,5 +1,6 @@
-"""Measurement probes the benchmark owns: process-tree memory, stream
-progress, and switching Spark's event log on and off in a live session."""
+"""Measurement probes the benchmark owns: process-tree memory and CPU
+time, stream progress, and switching Spark's event log on and off in a
+live session."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 PAGE = os.sysconf("SC_PAGE_SIZE")
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 def _resident_bytes(pid: int, rss: bool) -> int:
@@ -24,17 +26,12 @@ def _resident_bytes(pid: int, rss: bool) -> int:
     return 0
 
 
-def _tree_resident_bytes(root: int) -> int:
-    """Resident bytes of ``root`` and all its descendants.
-
-    The driver JVM, a direct child, is counted by RSS: it shares no pages
-    with the rest of the tree, and a PSS page-table walk over its heap costs
-    tens of milliseconds.  Every other process is counted by PSS: Python
-    workers are forked from one daemon and share its pages, and a child the
-    JVM is spawning still shares the JVM's.
-    """
+def _proc_table() -> tuple[dict[int, list[int]], dict[int, bytes], dict[int, list[bytes]]]:
+    """Children, command name and ``stat`` fields after the command name
+    of every process."""
     children: dict[int, list[int]] = {}
     comms: dict[int, bytes] = {}
+    fields: dict[int, list[bytes]] = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
             continue
@@ -44,8 +41,23 @@ def _tree_resident_bytes(root: int) -> int:
         except OSError:
             continue
         close = stat.rindex(b")")
-        comms[int(entry)] = stat[stat.index(b"(") + 1:close]
-        children.setdefault(int(stat[close + 2:].split()[1]), []).append(int(entry))
+        pid = int(entry)
+        comms[pid] = stat[stat.index(b"(") + 1:close]
+        fields[pid] = stat[close + 2:].split()
+        children.setdefault(int(fields[pid][1]), []).append(pid)
+    return children, comms, fields
+
+
+def _tree_resident_bytes(root: int) -> int:
+    """Resident bytes of ``root`` and all its descendants.
+
+    The driver JVM, a direct child, is counted by RSS: it shares no pages
+    with the rest of the tree, and a PSS page-table walk over its heap costs
+    tens of milliseconds.  Every other process is counted by PSS: Python
+    workers are forked from one daemon and share its pages, and a child the
+    JVM is spawning still shares the JVM's.
+    """
+    children, comms, _ = _proc_table()
     total, todo = 0, [(root, None)]
     while todo:
         pid, parent = todo.pop()
@@ -55,6 +67,44 @@ def _tree_resident_bytes(root: int) -> int:
         except OSError:
             pass
     return total
+
+
+def _ticks(fields: list[bytes], children: bool) -> int:
+    # utime, stime (fields 14-15 of /proc/<pid>/stat), then cutime, cstime
+    return sum(int(v) for v in fields[11:15 if children else 13])
+
+
+def program_cpu_s(root: int) -> float:
+    """CPU seconds, user plus system, of every descendant of ``root`` (the
+    driver JVM and the Python workers below it), less the JVM's JIT
+    compiler threads.  ``root`` itself is left out, as its sampler thread
+    is the benchmark's.  A worker that exited and was waited for still
+    counts, in its parent's children's time.  Compiler threads must not
+    exit (``-XX:-UseDynamicNumberOfCompilerThreads``), or their time would
+    stay in the process total but leave the thread sum."""
+    children, comms, fields = _proc_table()
+    ticks, todo = 0, list(children.get(root, ()))
+    while todo:
+        pid = todo.pop()
+        todo.extend(children.get(pid, ()))
+        ticks += _ticks(fields[pid], children=True)
+        if comms[pid] == b"java":
+            ticks -= _compiler_ticks(pid)
+    return ticks / CLK_TCK
+
+
+def _compiler_ticks(pid: int) -> int:
+    ticks = 0
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat", "rb") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        close = stat.rindex(b")")
+        if stat[stat.index(b"(") + 1:close].startswith((b"C1 Compiler", b"C2 Compiler")):
+            ticks += _ticks(stat[close + 2:].split(), children=False)
+    return ticks
 
 
 class RssSampler:

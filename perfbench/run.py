@@ -4,7 +4,8 @@ One closed-loop client in one process runs one query at a time on a
 ``local[4]`` session: ``get_session()``, then ``queries()[name](spark,
 sf_dir)``, then a noop sink, with ``spark.catalog.clearCache()`` outside
 the timer.  Inputs are generated from one fixed data seed (see ``datagen``);
-``--seed`` only permutes the query order of every pass.
+the cold pass runs the queries in their listed order, and ``--seed`` only
+permutes the query order of every warm pass.
 
     python3 perfbench/run.py --workload tpch_relational --seed 1 --seconds 10 --trace 0
 
@@ -57,6 +58,11 @@ CORES = 4
 #: count keeps every run, and a faster program, at the same point of that
 #: curve.  Odd counts balance traced and untraced passes (see ``_measure``).
 PASSES = {"tpch_relational": 3, "corpus_text": 5, "stream_drains": 5}
+#: End-to-end figures that ``BENCHMARK.json`` does not bound.  Every run
+#: prints them, and a traced run also reports them as ``e2e.*`` per-layer
+#: metrics.  Wall times spread too much on a shared host (see README.md).
+UNBOUNDED = ("query_cpu_p50_s", "query_cpu_tail_s",
+             "warmup_s", "pass_s", "query_p50_s", "query_tail_s")
 #: Seed of the generated tables.  It is fixed so that run-to-run spread is
 #: noise of the host and the program, not of the data.
 DATA_SEED = 42
@@ -150,9 +156,10 @@ class Bench:
             # The serial collector grows the heap by occupancy alone, not by
             # GC time as G1 does, so peak memory follows what the program
             # holds rather than how busy the host was.  No hsperfdata file
-            # in /tmp.
+            # in /tmp.  JIT compiler threads never exit, so the CPU probe
+            # can subtract their time (see probes.program_cpu_s).
             "spark.driver.extraJavaOptions": (
-                "-XX:+UseSerialGC -XX:-UsePerfData "
+                "-XX:+UseSerialGC -XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads "
                 f"-Djava.io.tmpdir={os.path.join(self.run_dir, 'tmp')}"
             ),
         }
@@ -198,12 +205,15 @@ class Bench:
 
     def _execute(self, spark, build):
         """Build one query and drain it into the noop sink; return the
-        frame and the build start, build end and sink end times."""
+        frame, the build start, build end and sink end times, and the CPU
+        seconds the query cost."""
+        cpu = _program_cpu_s()
         a = time.perf_counter()
         df = build(spark, self.data_dir)
         b = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        return df, a, b, time.perf_counter()
+        c = time.perf_counter()
+        return df, a, b, c, _program_cpu_s() - cpu
 
     def _attempt(self, spark, name, build):
         self.attempted += 1
@@ -220,13 +230,16 @@ class Bench:
 
         tracing = Tracing(spark) if self.args.trace else None
         oracle = Oracle(self.data_dir, self.tables, oracles)
-        warmup = 0.0
+        warmup = warmup_cpu = 0.0
         try:
-            for name in self.rng.sample(self.names, len(self.names)):
+            # the first query of a run pays for first-touch work that later
+            # ones share, so the cold pass keeps one order in every run
+            for name in self.names:
                 res = self._attempt(spark, name, queries[name])
                 if res is not None:
-                    df, a, _, c = res
+                    df, a, _, c, cpu = res
                     warmup += c - a
+                    warmup_cpu += cpu
                     if not _safe_match(oracle, name, df):
                         self.failed += 1
                 spark.catalog.clearCache()
@@ -246,20 +259,20 @@ class Bench:
                 tracing.disable()
             passes.append(self._pass(spark, queries, tracing if traced else None))
 
-        samples = [s for p in passes for s in p["walls"].values()]
-        walls_of: dict[str, list[float]] = {}
-        for p in passes:
-            for name, wall in p["walls"].items():
-                walls_of.setdefault(name, []).append(wall)
-        per_query = {name: statistics.median(walls) for name, walls in walls_of.items()}
-        slowest = max(per_query, key=per_query.get)
-        self.info["tail"] = f"{slowest}, median of {len(passes)} passes"
+        cpu_pass, cpu_p50, cpu_tail, cpu_slowest = _summary(passes, "cpus")
+        wall_pass, wall_p50, wall_tail, wall_slowest = _summary(passes, "walls")
+        self.info["tail"] = f"{cpu_slowest} (cpu), {wall_slowest} (wall), median of {len(passes)} passes"
         self.info["warm_passes_s"] = [round(sum(p["walls"].values()), 3) for p in passes]
+        self.info["warm_passes_cpu_s"] = [round(sum(p["cpus"].values()), 2) for p in passes]
         out = {
+            "warmup_cpu_s": warmup_cpu,
+            "pass_cpu_s": cpu_pass,
+            "query_cpu_p50_s": cpu_p50,
+            "query_cpu_tail_s": cpu_tail,
             "warmup_s": warmup,
-            "pass_s": statistics.median(sum(p["walls"].values()) for p in passes),
-            "query_p50_s": statistics.median(samples),
-            "query_tail_s": per_query[slowest],
+            "pass_s": wall_pass,
+            "query_p50_s": wall_p50,
+            "query_tail_s": wall_tail,
         }
         if tracing is not None:
             tracing.enable()
@@ -269,19 +282,20 @@ class Bench:
 
     def _pass(self, spark, queries, tracing) -> dict:
         walls: dict[str, float] = {}
+        cpus: dict[str, float] = {}
         windows = []
         caching: dict[str, tuple[int, int, float]] = {}
         for name in self.rng.sample(self.names, len(self.names)):
             res = self._attempt(spark, name, queries[name])
             if res is not None:
-                _, a, b, c = res
+                _, a, b, c, cpus[name] = res
                 walls[name] = c - a
                 windows.append((name, self.epoch(a), self.epoch(b), self.epoch(c)))
             rdds, cached = tracing.cache_probe() if tracing is not None else (0, 0)
             r0 = time.perf_counter()
             spark.catalog.clearCache()
             caching[name] = (rdds, cached, time.perf_counter() - r0)
-        return {"walls": walls, "windows": windows, "caching": caching,
+        return {"walls": walls, "cpus": cpus, "windows": windows, "caching": caching,
                 "traced": tracing is not None}
 
     def _layers(self, tracing, passes) -> None:
@@ -319,6 +333,31 @@ class Bench:
         self.layers["trace.pass_s"] = traced_pass_s
         self.layers["trace.overhead"] = traced_pass_s / plain_pass_s
         self.layers["trace.check_failures"] = float(check_failures)
+
+
+def _program_cpu_s() -> float:
+    """CPU seconds the program has used so far: every process below this
+    one (the driver JVM, less its JIT compiler, and its Python workers)
+    plus this thread, which makes the PySpark calls.  The benchmark's other
+    threads are left out."""
+    from probes import program_cpu_s
+
+    return program_cpu_s(os.getpid()) + time.thread_time()
+
+
+def _summary(passes, key: str) -> tuple[float, float, float, str]:
+    """Median pass total, median per-query sample, and the median of the
+    query with the highest median, with that query's name, of ``passes``'
+    per-query ``key`` figures."""
+    samples = [v for p in passes for v in p[key].values()]
+    of_query: dict[str, list[float]] = {}
+    for p in passes:
+        for name, v in p[key].items():
+            of_query.setdefault(name, []).append(v)
+    per_query = {name: statistics.median(vs) for name, vs in of_query.items()}
+    slowest = max(per_query, key=per_query.get)
+    return (statistics.median(sum(p[key].values()) for p in passes),
+            statistics.median(samples), per_query[slowest], slowest)
 
 
 def _safe_match(oracle: Oracle, name: str, df) -> bool:
@@ -386,11 +425,11 @@ def main(argv=None) -> int:
     print("env " + json.dumps(bench.info, sort_keys=True))
     for line in bench.detail:
         print(line)
-    units = {m["name"]: m["unit"] for m in spec["end_to_end"]}
     for name, value in e2e.items():
-        print(f"{name} {value:.6g} {units[name]}")
+        print(f"{name} {value:.6g} {'MB' if name.endswith('_mb') else 's'}")
     print(f"failed_frac {bench.failed / max(bench.attempted, 1):.6g} fraction")
     if args.trace:
+        bench.layers.update({f"e2e.{k}": e2e[k] for k in UNBOUNDED})
         wanted = spec["per_layer"]
         values = bench.layers
     else:
