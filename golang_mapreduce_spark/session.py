@@ -13,6 +13,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 #: Defaults chosen for local[N] testing but expressed as ratios/absolutes
 #: that transfer to a multi-executor cluster: AQE owns runtime partition
 #: counts, so shuffle.partitions is only an upper seed; 128 MB scan splits
@@ -50,16 +56,34 @@ DEFAULT_CONF = {
     "spark.ui.retainedJobs": "100",
     "spark.ui.retainedStages": "100",
     "spark.ui.retainedTasks": "1000",
+    # Stream checkpoints (offset/commit logs, state-store deltas) commit
+    # by write-temp-then-rename, as the reference commits its map and
+    # reduce outputs (worker.go:156,223).  Spark's default manager goes
+    # through Hadoop's FileContext, whose rename on a local ``file:``
+    # path without libhadoop forks a ``readlink`` per getFileLinkStatus:
+    # 114-160 per warm pass of perfbench's three stream_drains queries on
+    # local[4] (4-vCPU VM), and none with the FileSystem-API manager,
+    # which cut that pass's CPU time by a third.  Hadoop still forks a
+    # ``chmod`` per file it creates (about 80 per such pass).  The
+    # FileSystem-API manager renames with POSIX rename(2), which is
+    # atomic on a local disk, and keeps Hadoop's .crc files and Spark's
+    # checkpoint checksums.  Sessions the engine did not build get the
+    # same value from ensure_session_invariants(checkpoints=True).
+    CHECKPOINT_FILE_MANAGER_KEY: FS_CHECKPOINT_FILE_MANAGER,
 }
 
 
-def ensure_session_invariants(spark: SparkSession, events: bool = False) -> None:
-    """Pin the two session settings every oracle-checked read depends on,
+def ensure_session_invariants(
+    spark: SparkSession, events: bool = False, checkpoints: bool = False
+) -> None:
+    """Pin the session settings every oracle-checked read depends on,
     on sessions the engine did not build (the external driver constructs
     its own SparkSession with unknown timezone and no nanos conf; a
-    hostile-TZ run is part of the robustness suite).  Guarded set —
-    only written when the value actually differs — so repeated
-    load_table calls on a get_session() session never churn conf.
+    hostile-TZ run is part of the robustness suite).  ``checkpoints``
+    also pins the stream checkpoint file manager (see DEFAULT_CONF);
+    stream drains pass it before they start.  Guarded set — only
+    written when the value actually differs, and never restored — so
+    repeated calls on a get_session() session never churn conf.
     This is the single conf-mutation point outside the builder."""
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -67,6 +91,11 @@ def ensure_session_invariants(spark: SparkSession, events: bool = False) -> None
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") != "true"
     ):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if checkpoints and (
+        spark.conf.get(CHECKPOINT_FILE_MANAGER_KEY, None)
+        != FS_CHECKPOINT_FILE_MANAGER
+    ):
+        spark.conf.set(CHECKPOINT_FILE_MANAGER_KEY, FS_CHECKPOINT_FILE_MANAGER)
 
 
 def s3a_conf(

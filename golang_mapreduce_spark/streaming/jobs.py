@@ -15,12 +15,12 @@ bounded batches.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
 import threading
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -172,6 +172,48 @@ def join_state_partitions(spark: SparkSession) -> int:
     return max(1, base // 4)
 
 
+def drain_available_now(
+    stream: DataFrame,
+    spark: SparkSession,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+) -> DataFrame | None:
+    """Run ``stream`` to completion with trigger(availableNow) — the one
+    place the package starts a stream.  It owns the stream's checkpoint:
+    a fresh driver-local temp dir, written through the FileSystem-API
+    checkpoint file manager (pinned on the session first, see
+    ``session.DEFAULT_CONF``: the default manager forks a ``readlink``
+    per checkpoint rename on a local path), and deleted after the drain.
+    A terminated query never reads its checkpoint again, and callers
+    drain repeatedly, so leaked dirs would add up (ADVICE r2).
+
+    Without ``foreach_batch`` the rows go to a memory sink and come back
+    as a batch DataFrame.  The frame is resolved before the sink's temp
+    view is dropped, so the drained rows stay reachable through it while
+    the caller's catalog gains no view per drain.  With ``foreach_batch``
+    each micro-batch goes to that function and the drain returns None."""
+    ensure_session_invariants(spark, checkpoints=True)
+    name = "s_" + uuid.uuid4().hex[:12]
+    ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
+    writer = (
+        stream.writeStream.queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    try:
+        writer.start().awaitTermination()
+        return None if foreach_batch is not None else spark.table(name)
+    finally:
+        if foreach_batch is None:
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_stream_to_batch(
     result: DataFrame,
     spark: SparkSession,
@@ -179,9 +221,10 @@ def run_stream_to_batch(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain a streaming aggregation with trigger(availableNow) into an
-    in-memory table and return it as a batch DataFrame.  ``complete``
-    output mode emits every window regardless of watermark position, so a
-    fully-drained stream equals the batch query over the same files;
+    in-memory table through :func:`drain_available_now` and return it as
+    a batch DataFrame.  ``complete`` output mode emits every window
+    regardless of watermark position, so a fully-drained stream equals
+    the batch query over the same files;
     ``append`` emits only watermark-finalized rows (the caller must
     advance the watermark past every real window, e.g. via sentinel
     files, for the drain to be total).
@@ -201,39 +244,21 @@ def run_stream_to_batch(
     (e.g. a batch query on another driver thread sharing the session)
     could still observe the temporary value — callers that overlap jobs
     from a thread pool must not overlap them with a bounded drain."""
-    name = "s_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
+    if state_partitions is None:
+        return drain_available_now(result, spark, output_mode)
     conf_key = "spark.sql.shuffle.partitions"
-    lock = _CONF_OVERRIDE_LOCK if state_partitions is not None else (
-        contextlib.nullcontext()
-    )
-    with lock:
+    with _CONF_OVERRIDE_LOCK:
         old_parts = spark.conf.get(conf_key)
         try:
-            if state_partitions is not None:
-                # never RAISE parallelism above the session's (a driver
-                # benching at 4 cores keeps 4); state partitioning is
-                # fixed at the first micro-batch, so set before .start()
-                spark.conf.set(
-                    conf_key,
-                    str(max(1, min(int(old_parts), state_partitions))),
-                )
-            q = (
-                result.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            # never RAISE parallelism above the session's (a driver
+            # benching at 4 cores keeps 4); state partitioning is
+            # fixed at the first micro-batch, so set before .start()
+            spark.conf.set(
+                conf_key, str(max(1, min(int(old_parts), state_partitions)))
             )
-            q.awaitTermination()
+            return drain_available_now(result, spark, output_mode)
         finally:
             spark.conf.set(conf_key, old_parts)
-            # the memory sink holds the drained rows; a terminated query
-            # never reads its checkpoint again (bench/correctness call
-            # these repeatedly — leaked dirs add up, ADVICE r2)
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
 
 
 def docs_stream_schema() -> T.StructType:
@@ -360,7 +385,6 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from golang_mapreduce_spark.streaming.stateful import sessionize_with_state
 
     src = tempfile.mkdtemp(prefix="gmrs_drain_src_")
-    ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
     try:
         real = os.path.join(src, "00_events.parquet")
         shutil.copy(os.path.join(sf_dir, "events.parquet"), real)
@@ -378,23 +402,12 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 2)
             .parquet(src)
         )
-        name = "sess_" + uuid.uuid4().hex[:12]
-        q = (
-            sessionize_with_state(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        out = drain_available_now(sessionize_with_state(stream), spark)
     finally:
-        # drained memory sink keeps the rows; source copy + checkpoint
-        # are dead weight after termination (leaked per call, ADVICE r2)
+        # the drained memory sink keeps the rows; the source copy is
+        # dead weight after termination (leaked per call, ADVICE r2)
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).where(F.col("user_id") >= 0)
+    return out.where(F.col("user_id") >= 0)
 
 
 #: Batch gaps-and-islands equivalent of the drained stateful operator:
@@ -437,7 +450,7 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles both streams on user_id once, identically to the batch
     plan, but with O(watermark window) memory instead of O(history).
     State-store partitions sized by :func:`join_state_partitions`
-    (cores/2 — r17; a stream-stream join opens 4 store instances per
+    (cores/4 — r17; a stream-stream join opens 4 store instances per
     partition per micro-batch, so the session default paid cores x 4
     open/commit cycles for watermark-bounded state)."""
     base = read_events_stream(spark, sf_dir)
@@ -510,11 +523,8 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent rename in worker.go:156,223 — same contract, record
     granularity instead of task granularity)."""
     import os
-    import uuid
 
     src = tempfile.mkdtemp(prefix="gmrs_dup_src_")
-    ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
-    name = "dedup_" + uuid.uuid4().hex[:12]
     try:
         for i in (0, 1):
             shutil.copy(
@@ -527,21 +537,11 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         ).withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        out = drain_available_now(stream, spark)
     finally:
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
@@ -600,8 +600,6 @@ def streaming_packed_sequences(
         .persist()
     )
     src = tempfile.mkdtemp(prefix="gmrs_pack_src_")
-    ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
-    name = "pack_" + uuid.uuid4().hex[:12]
     try:
         lo, hi = sizes.agg(F.min("doc_id"), F.max("doc_id")).first()
         if lo is None:
@@ -633,21 +631,11 @@ def streaming_packed_sequences(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            pack_with_state(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        out = drain_available_now(pack_with_state(stream), spark)
     finally:
         sizes.unpersist()
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return out
 
 
 def kafka_stream_options(
@@ -1329,7 +1317,7 @@ def streaming_unattributed_purchases(spark: SparkSession, sf_dir: str) -> DataFr
             ),
             "left_outer",
         )
-        # state stores sized by join_state_partitions (cores/2 — r17,
+        # state stores sized by join_state_partitions (cores/4 — r17,
         # same rationale as streaming_click_attribution)
         out = run_stream_to_batch(
             joined,
@@ -1562,7 +1550,6 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_invariants(spark, events=True)
     src = tempfile.mkdtemp(prefix="gmrs_upsert_src_")
-    ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
     snap_root = tempfile.mkdtemp(prefix="gmrs_snap_")
     halves = tempfile.mkdtemp(prefix="gmrs_halves_")
     state: dict = {"latest": None}
@@ -1602,13 +1589,7 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged.write.mode("overwrite").parquet(out)  # idempotent on retry
             state["latest"] = out
 
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_available_now(stream, spark, foreach_batch=merge)
         assert state["latest"] is not None
         # materialize into executor blocks (lineage cut) before the temp
         # snapshot dir vanishes — never a driver-side collect; the
@@ -1624,7 +1605,6 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(halves, ignore_errors=True)
         shutil.rmtree(snap_root, ignore_errors=True)
 

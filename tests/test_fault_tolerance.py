@@ -19,6 +19,8 @@ import tempfile
 
 import pytest
 
+pytestmark = pytest.mark.streaming
+
 _RETRY_SCRIPT = r"""
 import os, sys
 import pandas as pd

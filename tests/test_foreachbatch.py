@@ -9,6 +9,7 @@ from __future__ import annotations
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.sources.fixtures import load_table, normalize_events_ts
@@ -17,6 +18,8 @@ from golang_mapreduce_spark.streaming.jobs import (
     events_ts_layout,
     read_events_stream,
 )
+
+pytestmark = pytest.mark.streaming
 
 
 def test_foreachbatch_idempotent_overwrite(spark, sf_dir):

@@ -22,12 +22,15 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from golang_mapreduce_spark.sources.fixtures import normalize_events_ts
 from golang_mapreduce_spark.streaming.jobs import events_stream_schema
+
+pytestmark = pytest.mark.streaming
 
 US = 10**6
 HOUR = 3600 * US

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.sources.fixtures import load_table
@@ -18,6 +19,8 @@ from golang_mapreduce_spark.streaming.jobs import (
     read_events_stream,
 )
 from golang_mapreduce_spark.streaming.metrics import ProgressCollector, observed
+
+pytestmark = pytest.mark.streaming
 
 
 def test_batch_observation_counts_filter_dropout(spark, sf_dir):

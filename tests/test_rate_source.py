@@ -8,7 +8,10 @@ from __future__ import annotations
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.streaming
 
 
 def test_rate_source_drives_windowed_agg(spark):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.session import rocksdb_state_conf
@@ -15,6 +16,8 @@ from golang_mapreduce_spark.streaming.jobs import (
     hourly_counts_stream,
     read_events_stream,
 )
+
+pytestmark = pytest.mark.streaming
 
 
 def test_rocksdb_conf_shape():

@@ -23,6 +23,8 @@ from golang_mapreduce_spark.streaming.stateful import (
     sessionize_with_state,
 )
 
+pytestmark = pytest.mark.streaming
+
 
 def _batch_sessions(sf_dir: str) -> set[tuple]:
     rows = duckdb.sql(

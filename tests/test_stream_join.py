@@ -8,10 +8,13 @@ from __future__ import annotations
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.sources.fixtures import load_table
 from golang_mapreduce_spark.streaming.jobs import read_events_stream
+
+pytestmark = pytest.mark.streaming
 
 
 def _streams(spark, sf_dir):

@@ -13,6 +13,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.sources.fixtures import load_table, normalize_events_ts
@@ -20,6 +21,8 @@ from golang_mapreduce_spark.streaming.jobs import (
     events_stream_schema,
     events_ts_layout,
 )
+
+pytestmark = pytest.mark.streaming
 
 
 def test_checkpoint_resume_skips_committed_files(spark, sf_dir):

@@ -4,7 +4,10 @@ drained stream-static triage must equal the batch triage verdicts."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.streaming
 
 
 def test_rowwise_signature_equals_batch_signatures(spark, sf_dir):
