@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Directory that holds the ``golang_mapreduce_spark`` package.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+EXECUTOR_PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+
 CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 FS_CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -206,6 +210,12 @@ def get_session(
     )
     if extra_conf:
         conf.update(extra_conf)
+    # Python workers import this package to run its UDFs; put it first on
+    # their path so they find it from any launch directory, keeping any
+    # path the caller gives.
+    conf[EXECUTOR_PYTHONPATH_KEY] = os.pathsep.join(
+        p for p in (PACKAGE_PARENT, conf.get(EXECUTOR_PYTHONPATH_KEY)) if p
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

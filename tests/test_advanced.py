@@ -3,10 +3,13 @@ the map_reduce facade's algebraic equivalence (hypothesis)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from golang_mapreduce_spark.mapreduce import map_reduce
 from golang_mapreduce_spark.operators.advanced import approx_distinct_users
+
+pytestmark = pytest.mark.python_udf
 
 _spark = None
 

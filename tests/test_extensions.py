@@ -13,6 +13,8 @@ from golang_mapreduce_spark.operators.mr_parity import word_count
 from golang_mapreduce_spark.operators.relational import q5_local_supplier, q6_revenue_forecast
 from golang_mapreduce_spark.plans import has_broadcast_join, pushed_filters, read_schema
 
+pytestmark = pytest.mark.python_udf
+
 
 def test_image_features_match_independent_python(spark, sf_dir):
     got = {

@@ -19,7 +19,7 @@ import tempfile
 
 import pytest
 
-pytestmark = pytest.mark.streaming
+pytestmark = [pytest.mark.streaming, pytest.mark.python_udf]
 
 _RETRY_SCRIPT = r"""
 import os, sys

@@ -13,6 +13,8 @@ import __spark_entry__ as entry_mod
 from golang_mapreduce_spark.plans.checks import formatted_plan
 from tests.test_plan_quality import count_nodes
 
+pytestmark = pytest.mark.python_udf
+
 #: queries whose plan is only produced by actually running a stream or a
 #: driver-side iterative loop — excluded from the static sweep (their
 #: plan quality is covered by their own tests)

@@ -5,9 +5,13 @@ a reference wc job — the Spark analog of test-mr.sh's oracle diff."""
 
 from __future__ import annotations
 
+import pytest
+
 from golang_mapreduce_spark.mapreduce import map_reduce, wc_map, wc_reduce
 from golang_mapreduce_spark.sources.fixtures import read_whole_text_corpus
 from golang_mapreduce_spark.sources.golden import read_golden_text, write_golden_text
+
+pytestmark = pytest.mark.python_udf
 
 CORPUS = {
     "pg-a.txt": "the quick brown fox\nthe lazy dog",

@@ -23,7 +23,7 @@ from golang_mapreduce_spark.streaming.stateful import (
     sessionize_with_state,
 )
 
-pytestmark = pytest.mark.streaming
+pytestmark = [pytest.mark.streaming, pytest.mark.python_udf]
 
 
 def _batch_sessions(sf_dir: str) -> set[tuple]:
