@@ -57,700 +57,11 @@ _MODULES = [
     incremental,
 ]
 
-#: The external driver records correctness for the FIRST 50 registered
-#: queries only, so the CURRENT round's window (now ``_ROUND15_WINDOW``,
-#: below) IS the driver window: exactly those 50 names get a
-#: CORRECTNESS row; everything after entry 50 is unchecked by the
-#: driver this round and is covered instead by the mandatory local
-#: type-sensitive parity suite (tests/test_oracle_parity.py,
-#: parameterized over all oracle-backed queries — keep it green in CI;
-#: it is the compensating gate).
+#: The first 50 registered names are the driver's correctness window: it
+#: records CORRECTNESS rows for those only, so ``_ordered`` serves
+#: ``_ROUND15_WINDOW`` first.  Everything after entry 50 is gated by
+#: tests/test_oracle_parity.py.
 #:
-#: _ROUND8_WINDOW is the HISTORICAL round-8 pin, kept so
-#: ``tests/test_rotation.py`` can verify it against the r1–r7 ledger
-#: state that generated it (``through_round=7``, VERDICT r8 #1).
-#:
-#: Round-8 window: GENERATED by
-#: ``golang_mapreduce_spark/tools/rotation.py`` (VERDICT r7 #5) from the
-#: CORRECTNESS_r0*.json ledger — new + changed + pins + stalest-first
-#: fill (r1-cohort-first within a tier) + the ≥15 r1-cohort floor.
-#: ``tests/test_rotation.py`` asserts this literal equals
-#: ``rotation.round8_window()``; regenerate and re-paste after any
-#: mid-round addition (update ROUND8_NEW/ROUND8_CHANGED in rotation.py).
-#:
-#: Exceptions the math displaced (each deferred entry keeps an
-#: in-window family mate; all stay parity-covered in CI): the r1 floor
-#: plus the 9 head entries (7 new ops + 2 changed code paths) displace
-#: 14 non-r1 r4-stale fills — scd2_customer_orders →
-#: merge_upsert_orders (versioned-orders upsert family),
-#: packing_efficiency → packed_sequences + seq_len_bucket_histogram,
-#: join_skew_diagnostics → runtime_filtered_join (join-planning
-#: diagnostics family), image_phash_pairs → image_resize +
-#: multimodal_join (image-blob machinery), char_trigram_lang_profiles →
-#: lang_stopword_quality (lang-keyed text profiling),
-#: embedding_outliers → embedding_dim_stats (embedding-aggregate
-#: family), ann_ivf_adaptive + ivf_int8_topk + pq_codes + pq_adc_topk +
-#: pq_residual_topk → int8_quant_topk + binary_quant_topk (the
-#: quantized-ANN family, both in-window), emb_neardup_multiprobe →
-#: pair_review_sample + dup_graph_degree_stats (detector-audit family
-#: over the same pair machinery, both new in-window), paragraph_dedup +
-#: dedup_keep_best → clean_corpus (the keep-one/keep-best cluster
-#: collapse runs inside it, in-window) + doc_fingerprints,
-#: neardup_method_agreement → pair_review_sample +
-#: dup_graph_degree_stats (same detector-audit family).  The 5 r1∩r5
-#: entries the floor did not
-#: need (date_funcs, json_events, knn_numpy_batched, media_blob_stats,
-#: simhash_signatures) defer with mates scalar_funcs (in-window),
-#: json_events_typed / knn-ANN cohort / multimodal_join (in-window) /
-#: simhash_neardup_pairs (all r7/r6-fresh).
-_ROUND8_WINDOW = [
-    # new this round (never driver-checked)
-    "pipeline_drop_attribution",
-    "decontaminate_bloom",
-    "binary_quant_topk",
-    "pair_review_sample",
-    "seq_len_bucket_histogram",
-    "quant_tier_recall",
-    "dup_graph_degree_stats",
-    # new, second mid-round batch: the governance/CDC/mining ops
-    "dq_constraint_audit",
-    "snapshot_diff",
-    "bitext_margin_pairs",
-    "neardup_pagerank",
-    "pmi_bigrams",
-    # new, third mid-round batch: retrieval rank quality, Lloyd step,
-    # weighted reservoir, outer stream-stream join
-    "ann_rank_quality",
-    "kmeans_refine_centroids",
-    "weighted_reservoir_sample",
-    "streaming_unattributed_purchases",
-    # code path changed this round (see rotation.ROUND8_CHANGED)
-    "training_data_run",
-    "containment_bottomk_pairs",
-    # pins: the reference's own golden pair (test-mr.sh:78-142) —
-    # VERDICT r7 #1 / r6 #8
-    "wc",
-    "indexer",
-    # r3-stale cohort drains to 17 of 18: the r1 floor displaced
-    # runtime_filtered_join (newest r3 by registration), which defers
-    # with its incremental-maintenance family mates merge_upsert_orders
-    # (in-window) and snapshot_diff (new, in-window)
-    "resample_gapfill_hourly",
-    "source_reputation",
-    "shuffle_shard_manifest",
-    "retention_cohorts",
-    "int8_quant_topk",
-    "hard_negative_mining",
-    "embedding_dim_stats",
-    "doc_perplexity_bigram",
-    "bm25_search",
-    "doc_repetition_scores",
-    "lang_stopword_quality",
-    "doc_perplexity",
-    "image_resize",
-    "decontaminate_docs",
-    "boilerplate_ngrams",
-    "packed_sequences",
-    "merge_upsert_orders",
-    # r4-stale ∩ r1-cohort (4)
-    "doc_fingerprints",
-    "bigram_counts",
-    "winnow_fingerprints",
-    "multimodal_join",
-    # r4-stale fill: NONE remain — the 16-entry new-op head + the r1
-    # floor displaced all of them (streaming_click_attribution /
-    # streaming_dedup / streaming_packed_sequences defer with the
-    # r7-fresh streaming family rows, mr_indexer with the in-window
-    # wc + indexer mr-parity mates, dup_cluster_histogram with the
-    # in-window pair-graph mates dup_graph_degree_stats +
-    # neardup_pagerank, clean_corpus / clean_corpus_decontaminated
-    # with the in-window training_data_run pipeline mate,
-    # hourly_anomalies with the in-window resample_gapfill_hourly
-    # temporal mate)
-    # r1-cohort floor from r1 ∩ r5-stale (9 — doubles as stale refresh)
-    "correlated_min_price_parts",
-    "join_left_order_counts",
-    "join_semi_big_spenders",
-    "join_anti_inactive_customers",
-    "agg_rollup_returns",
-    "agg_cube_orders",
-    "distinct_stats",
-    "set_ops_segments",
-    "scalar_funcs",
-]
-
-#: Round-9 window: GENERATED by ``rotation.round9_window()`` over the
-#: rounds-1..8 ledger (``through_round=8`` — VERDICT r8 #1: the round-N
-#: window binds the ledger state that existed when it was generated, so
-#: the driver's own CORRECTNESS_r9.json landing cannot invalidate the
-#: pin).  Head (23 never-driver-checked): the two round-8 carryovers
-#: (VERDICT r8 #3) followed by the twenty-one round-9 additions, then
-#: the three code-path changes (neardup_pagerank cache-leak fix,
-#: dq_constraint_audit constraint rename — an output-contract change —
-#: and the image_phash_pairs star-collapse refactor).
-#: Fill: runtime_filtered_join (the lone r3 row) and the r4-stale
-#: cohort drain (VERDICT r8 #4 — 16 of 23 fit; the displaced seven and
-#: their in-window family mates are annotated inline below), then
-#: r5/r6-stale fill with the 15-entry r1-cohort floor met naturally.
-#: ``tests/test_rotation.py`` pins this literal against
-#: ``rotation.round9_window()``.
-_ROUND9_WINDOW = [
-    # never driver-checked: round-8 carryovers (VERDICT r8 #3) ...
-    "robust_quality_outliers",
-    "dup_span_manifest",
-    # ... then the round-9 additions (near-dup graph analytics, doc
-    # novelty, the normalization ladder, tokenizer char-coverage census,
-    # session entry paths, the declarative packing manifest, the
-    # quality-ablation cube, per-label embedding drift)
-    "graph_triangle_counts",
-    "rare_ngram_uniqueness",
-    "normalization_ladder",
-    "char_coverage_audit",
-    "session_funnel_paths",
-    "token_budget_pack_plan",
-    "quality_ablation_matrix",
-    "centroid_drift_by_label",
-    # ... and the second round-9 batch (mergeable-sketch heavy hitters,
-    # cross-lang vocab overlap, perceptual image clusters, the
-    # distributed power-iteration step)
-    "cms_heavy_hitters",
-    "lang_vocab_overlap",
-    "image_phash_clusters",
-    "embedding_power_iteration",
-    # ... and the third round-9 batch (incremental sketch cells, the
-    # foreachBatch MERGE snapshot sink)
-    "streaming_cms_cells",
-    "streaming_upsert_snapshot",
-    # ... and the fourth batch (the HLL mergeable-sketch twin of CMS)
-    "hll_distinct_by_source",
-    # ... and the user-keyed shuffle-skew census
-    "user_activity_power_law",
-    # ... and fuzzy record linkage + the streaming HLL half
-    "fuzzy_key_join_customers",
-    "streaming_hll_registers",
-    # ... and the seventh batch (k-center coreset, quantile
-    # normalization, funnel latency distribution)
-    "coreset_kcenter_select",
-    "quality_quantile_normalize",
-    "conversion_latency_quantiles",
-    # code path changed this round (rotation.ROUND9_CHANGED)
-    "neardup_pagerank",
-    "dq_constraint_audit",
-    # ... incl. image_phash_pairs, refactored for the star-collapse
-    # (its own r4-stale row gets refreshed here as a bonus)
-    "image_phash_pairs",
-    # the lone r3 row (displaced by the r1 floor in r8)
-    "runtime_filtered_join",
-    # the r4-stale cohort (VERDICT r8 #4) — 16 of 23 fit; the 16-entry
-    # new-op head displaced scd2_customer_orders (family mates
-    # merge_upsert_orders + snapshot_diff, r7/r8-green, plus the new
-    # in-window streaming_upsert_snapshot MERGE sibling),
-    # char_trigram_lang_profiles (mates: the new in-window
-    # char_coverage_audit + lang_vocab_overlap lang-profiling pair),
-    # image_phash_pairs (mate: the new in-window image_phash_clusters,
-    # which composes it directly), join_skew_diagnostics (mate:
-    # runtime_filtered_join, in-window), packing_efficiency (mate: the
-    # new in-window token_budget_pack_plan manifest over the same
-    # packing machinery), ivf_int8_topk (mates: the r8-green
-    # int8_quant_topk + the in-window pq/ann quantized family), and
-    # embedding_outliers (mates: the new in-window
-    # centroid_drift_by_label + embedding_power_iteration
-    # embedding-aggregate pair), and pq_adc_topk + pq_residual_topk
-    # (mate: pq_codes — displaced in the final regen, so the PQ family
-    # defers together on the r8-green int8_quant_topk + binary_quant_topk
-    # quantized mates), and ann_ivf_adaptive + emb_neardup_multiprobe
-    # (mates: the same r8-green quantized-ANN cohort + the in-window
-    # detector-audit graph ops), and neardup_method_agreement +
-    # dedup_keep_best + paragraph_dedup (mates: the in-window
-    # clean_corpus — whose keep-one collapse composes them — plus
-    # dup_cluster_histogram and the new graph trio); all fifteen stay
-    # parity-covered in CI
-    "clean_corpus",
-    "clean_corpus_decontaminated",
-    "hourly_anomalies",
-    "streaming_click_attribution",
-    "streaming_dedup",
-    "streaming_packed_sequences",
-    "mr_indexer",
-    "dup_cluster_histogram",
-    # r5-stale ∩ r1-cohort (refreshes the floor's scarce resource; the
-    # non-r1 r5 fills — asof_purchase_click, hash_sample_docs,
-    # temperature_rebalance_sample, dataset_split_counts,
-    # balance_langs_sample, source_budget_select,
-    # event_transition_matrix — defer to r10 with the new in-window
-    # session_funnel_paths / token_budget_pack_plan /
-    # quality_ablation_matrix as family mates for the
-    # sampling/session/governance shapes)
-    "date_funcs",
-    "json_events",
-    "simhash_signatures",
-    "knn_numpy_batched",
-    "media_blob_stats",
-    # r6 fill, r1-cohort-first within the tier
-    "file_counts",
-    "file_profile",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q6_revenue_forecast",
-    "q4_priority_count",
-    "mr_wc",
-    "dedup_exact",
-    "minhash_signatures",
-]
-
-#: Round-10 window: GENERATED by ``rotation.round10_window()`` over the
-#: rounds-1..9 ledger (``through_round=9``).  Head (16 never-driver-
-#: checked): the two round-9 carryovers — the ONLY registered queries
-#: with zero driver rows (VERDICT r9 #1/#3) — then the fourteen
-#: round-10 additions, then the two ADVICE-fix code-path changes
-#: (quality_ablation_matrix's grouping_id output-contract change,
-#: coreset_kcenter_select's candidate anti-join).  Fill: the ENTIRE
-#: 14-entry r4-stale cohort drains (VERDICT r9 #1 — after this round no
-#: ledger row is older than r5), then 7 r5-stale, then the r6/r7 tiers
-#: r1-cohort-first, meeting the 15-entry r1 floor naturally.
-#: ``tests/test_rotation.py`` pins this literal against
-#: ``rotation.round10_window()``.
-_ROUND10_WINDOW = [
-    # never driver-checked: round-9 carryovers (VERDICT r9 #1) ...
-    "attribution_model_compare",
-    "rfm_segments",
-    # ... then the round-10 additions: the tokenizer-and-distribution
-    # census trio
-    "bpe_merge_candidates",
-    "zipf_slope_by_lang",
-    "js_divergence_sources",
-    # ... decayed counters, item-item CF, k-core peeling
-    "decayed_event_counts",
-    "item_cooccurrence_similarity",
-    "graph_kcore_membership",
-    # ... group-level split, Benford audit, clip calibration, the
-    # streaming trending log
-    "source_level_split",
-    "benford_price_audit",
-    "embedding_clip_calibration",
-    "streaming_trending_topk",
-    # ... and the fourth batch (market-basket rules, per-doc keywords)
-    "brand_basket_lift",
-    "doc_keywords_tfidf",
-    # ... and the fifth (Heaps'-law growth audit, traffic heatmap)
-    "heaps_law_fit",
-    "traffic_seasonality_profile",
-    # code path changed this round (rotation.ROUND10_CHANGED)
-    "quality_ablation_matrix",
-    "coreset_kcenter_select",
-    # the r4-stale cohort drains COMPLETELY (all 14 — VERDICT r9 #1)
-    "neardup_method_agreement",
-    "dedup_keep_best",
-    "paragraph_dedup",
-    "ann_ivf_adaptive",
-    "emb_neardup_multiprobe",
-    "pq_codes",
-    "pq_adc_topk",
-    "pq_residual_topk",
-    "ivf_int8_topk",
-    "embedding_outliers",
-    "char_trigram_lang_profiles",
-    "join_skew_diagnostics",
-    "packing_efficiency",
-    "scd2_customer_orders",
-    # r5-stale fill (the 18-entry head displaced the four newest-latest
-    # non-r1 r5 fills — source_budget_select, event_transition_matrix,
-    # dataset_split_counts, balance_langs_sample — family mates
-    # in-window: the new source_level_split + hash_sample_docs for the
-    # split/sampling shapes, temperature_rebalance_sample for the
-    # rebalance shape, session_funnel_paths was r9-green for the
-    # event-sequence shape; all four stay parity-covered in CI and the
-    # rest of the r5 cohort defers to r11)
-    "asof_purchase_click",
-    "hash_sample_docs",
-    "temperature_rebalance_sample",
-    # r6 fill, r1-cohort-first within the tier (the floor's resource)
-    "dedup_minhash_pairs",
-    "ngram_jaccard_pairs",
-    "knn_bruteforce",
-    "emb_neardup_pairs",
-    "quality_scores",
-    # r7 fill ∩ r1-cohort
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "topk_orders_per_customer",
-    "window_running_spend",
-    "tumbling_hourly",
-    "sliding_10m_5m",
-    "session_windows_30m",
-    "streaming_tumbling_hourly",
-    "stateful_sessionize",
-]
-
-
-#: Round-11 window: GENERATED by ``rotation.round11_window()`` over the
-#: rounds-1..10 ledger (``through_round=10``).  Head (6): two of the
-#: twelve round-11 additions (the other ten are ROUND12_NEW_CARRYOVER —
-#: the head is deliberately small because every slot beyond 6 would
-#: displace an r5 drain commitment; see rotation.ROUND11_NEW), then the
-#: four ADVICE-r10 code-path changes, benford_price_audit first among
-#: them (VERDICT r10 #1 — the round's one non-green driver row,
-#: re-certifying its ulp-immune rewrite).  Fill: the ENTIRE 29-entry
-#: r5-stale cohort drains (VERDICT r10 "What's missing" #1 — after this
-#: round no ledger row is older than r6); the r1 floor pulls its 15
-#: entries from the r7/r8 tiers (no r5/r6 row is r1-cohort), naturally
-#: displacing the newest-latest r6 fills, every one of which stays
-#: parity-covered in CI.  ``tests/test_rotation.py`` pins this literal
-#: against ``rotation.round11_window()``.
-_ROUND11_WINDOW = [
-    # never driver-checked: the two windowed round-11 additions
-    "rag_chunk_manifest",
-    "supplier_hhi_by_nation",
-    # code path changed this round (rotation.ROUND11_CHANGED — all four
-    # ADVICE-r10 fixes; benford is the CORRECTNESS_r10 hash mismatch)
-    "benford_price_audit",
-    "heaps_law_fit",
-    "brand_basket_lift",
-    "coreset_kcenter_select",
-    # the r5-stale cohort drains COMPLETELY (all 29 — VERDICT r10 #1)
-    "dataset_split_counts",
-    "balance_langs_sample",
-    "source_budget_select",
-    "event_transition_matrix",
-    "event_ngram_patterns",
-    "funnel_conversion",
-    "streaming_pii_rates",
-    "dedup_normalized",
-    "dedup_incremental_triage",
-    "minhash_calibration",
-    "ann_recall_at_k",
-    "knn_label_vote",
-    "matryoshka_recall",
-    "vocab_topk",
-    "ngram_novelty_curve",
-    "bpe_fertility_by_lang",
-    "bpe_token_stats",
-    "doc_length_histogram",
-    "quality_linear_score",
-    "sentence_stats",
-    "subword_sample_stats",
-    "pii_rates",
-    "pii_redacted_sample",
-    "blob_exact_dedup",
-    "grouping_sets_orders",
-    "source_token_concentration",
-    "contamination_rate_by_source",
-    "dsir_importance_weights",
-    "dsir_topk_selection",
-    # r1-floor fill: the five stalest r1-cohort entries (r7) ...
-    "neardup_clusters",
-    "ann_ivf_topk",
-    "lang_doc_stats",
-    "lang_id_heuristic",
-    "token_stats",
-    # ... then the r8-tier r1-cohort entries in registration order
-    # (wc/indexer are the reference's own golden pair)
-    "wc",
-    "indexer",
-    "correlated_min_price_parts",
-    "join_left_order_counts",
-    "join_semi_big_spenders",
-    "join_anti_inactive_customers",
-    "agg_rollup_returns",
-    "agg_cube_orders",
-    "distinct_stats",
-    "set_ops_segments",
-]
-
-
-#: Round-12 window: GENERATED by ``rotation.round12_window()`` over the
-#: rounds-1..11 ledger (``through_round=11``).  Head (10): exactly the
-#: ten round-11 carryovers — the ONLY registered queries with zero
-#: driver rows (VERDICT r11 #1) — in ROUND12_NEW_CARRYOVER order; no
-#: changed list (the ADVICE-r11 items were a test addition and
-#: docstring fixes, not code-path changes) and no pins.  Fill: 25 of
-#: the 32-entry r6-stale cohort (VERDICT r11 #2), then the 15-entry r1
-#: floor pulled from the r8/r9 tiers (no r6 row is r1-cohort), which
-#: displaces the seven newest-registered non-r1 r6 entries.  The seven
-#: deferred, each with its in-window family mate (the sanctioned
-#: deferral path, VERDICT r11 #2):
-#:   approx_distinct_users      — q16_supplier_counts (distinct-count
-#:                                family; exact COUNT(DISTINCT) path)
-#:   approx_percentile_prices   — bot_activity_heuristic (percentile
-#:                                family; exact interpolated median)
-#:   salted_word_count          — mr_wc (the unsalted word-count
-#:                                dataflow it salts)
-#:   salted_join_revenue        — q9_product_profit (the unsalted
-#:                                multi-join revenue family)
-#:   hotkey_salted_join_revenue — q9_product_profit (same, plus its
-#:                                sibling salted_join_revenue defers
-#:                                with it — one family, one slot cost)
-#:   perplexity_tail_split      — training_data_run_semantic (the
-#:                                quality-stratified pipeline family
-#:                                that consumes the split)
-#:   quality_drift_by_batch     — streaming_quality_monitor (the
-#:                                quality-mean monitoring family)
-#: All seven stay green in the CI parity suite and LEAD the r13 stale
-#: fill.  ``tests/test_rotation.py`` pins this literal against
-#: ``rotation.round12_window()``.
-_ROUND12_WINDOW = [
-    # never driver-checked: the ten round-11 carryovers (VERDICT r11 #1)
-    "hapax_richness_by_source",
-    "mutual_information_lang_source",
-    "customer_order_trend",
-    "cohort_ltv_curves",
-    "kfold_assignment_audit",
-    "chunk_dup_spectrum",
-    "script_mix_audit",
-    "bot_activity_heuristic",
-    "source_keyness_logodds",
-    "context_length_sensitivity",
-    # the r6-stale cohort drains (25 of 32 — the floor defers 7, above)
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_late_shipments",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q19_discounted_revenue",
-    "q21_waiting_suppliers",
-    "q22_dormant_rich_customers",
-    "training_data_run_semantic",
-    "source_budget_select_hist",
-    "topic_balanced_select",
-    "window_range_7day_spend",
-    "streaming_quality_monitor",
-    "semantic_dedup_keep",
-    "simhash_neardup_pairs",
-    "dup_ngram_fraction",
-    "semantic_drop_by_source",
-    "neardup_weighted_sample",
-    "lsh_rp_topk",
-    "ivf_cluster_stats",
-    "emb_cos_threshold_curve",
-    # r1-floor fill: the r8-tier r1-cohort entries ...
-    "scalar_funcs",
-    "doc_fingerprints",
-    "bigram_counts",
-    "winnow_fingerprints",
-    "multimodal_join",
-    # ... then the r9-tier r1-cohort entries in registration order
-    "file_counts",
-    "file_profile",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q6_revenue_forecast",
-    "q4_priority_count",
-    "date_funcs",
-    "json_events",
-    "mr_wc",
-]
-
-
-#: Round-13 window: GENERATED by ``rotation.round13_window()`` over the
-#: rounds-1..12 ledger (``through_round=12``).  Head (2): exactly the
-#: two round-12 carryovers — the ONLY registered queries with zero
-#: driver rows (VERDICT r12 #1) — in ROUND13_NEW_CARRYOVER order; no
-#: one-entry changed list: user_activity_power_law, whose flag-sweep
-#: plan fix (single scan + windowed grand total, see rotation.py
-#: ROUND13_CHANGED) re-certifies under the driver; the ADVICE-r12
-#: items were a test assertion, a CLI default, and a docstring reword
-#: — none a query code path.  No pins.  Fill: the SEVEN twice-waiting r6 deferrals lead (VERDICT r12
-#: #1: "they must not defer twice" — this is their exposure round),
-#: then 25 of the 34-entry r7-stale cohort, then the 15-entry r1 floor
-#: pulled from the r9/r10 tiers (no r6/r7 row is r1-cohort).  VERDICT
-#: r12's "2 + 7 + 34 = 43" arithmetic omitted that floor
-#: (2 + 7 + 34 + 15 = 58 > 50), so the floor plus the one-slot head
-#: growth displace the NINE newest-registered non-r1 r7 entries — the
-#: sanctioned family-mate deferral path of rounds 9–12.  The nine
-#: deferred, each with its in-window family mate:
-#:   nested_customer_profile — json_events_typed (the typed
-#:                             nested/struct extraction family)
-#:   percentile_prices       — approx_percentile_prices (the
-#:                             exact/approx percentile pair itself)
-#:   pivot_segment_revenue   — q10_returned_items (the customer⋈orders
-#:                             revenue-aggregation machinery the pivot
-#:                             projects; pivot plan pinned in CI)
-#:   sliding_chunk_stats     — gopher_quality_rules (the ws_words
-#:                             token-count scan-arithmetic family)
-#:   source_mixture_sample   — split_leakage_audit (the deterministic
-#:                             hash-bucket membership family)
-#:   stats_summary           — q10_returned_items (the exact-decimal
-#:                             lineitem revenue-moment aggregation)
-#:   tfidf_top_terms         — ngram_entropy_by_source (the exploded
-#:                             term-frequency-distribution family)
-#:   window_order_gaps       — window_running_spend (the per-customer
-#:                             ordered analytic-window family)
-#:   video_frame_sample      — image_features + audio_chunk_features
-#:                             (the same multimodal mapInPandas
-#:                             Arrow-decode machinery, both in-window)
-#: All nine stay green in the CI parity suite and LEAD the r14 stale
-#: fill.  ``tests/test_rotation.py`` pins this literal against
-#: ``rotation.round13_window()``.
-_ROUND13_WINDOW = [
-    # never driver-checked: the two round-12 carryovers (VERDICT r12 #1)
-    "shard_dup_manifest",
-    "crossencoder_rerank_audit",
-    # code path changed this round (rotation.ROUND13_CHANGED — the
-    # BENCH_r12 flag sweep's single-scan rewrite)
-    "user_activity_power_law",
-    # the seven r6 deferrals drain FIRST (their second-wait exposure)
-    "perplexity_tail_split",
-    "quality_drift_by_batch",
-    "approx_percentile_prices",
-    "approx_distinct_users",
-    "salted_word_count",
-    "salted_join_revenue",
-    "hotkey_salted_join_revenue",
-    # the r7-stale cohort drains (25 of 34 — head + floor defer 9, above)
-    "json_events_typed",
-    "q17_small_quantity_revenue",
-    "q20_promo_suppliers",
-    "range_clicks_before_error",
-    "split_leakage_audit",
-    "ntile_customer_quartiles",
-    "streaming_tumbling_append",
-    "streaming_session_append",
-    "streaming_incremental_triage",
-    "streaming_triage_append",
-    "incremental_triage_materialized",
-    "minhash_band_stats",
-    "ngram_jaccard_pruned",
-    "ngram_containment_pairs",
-    "cross_source_dup_matrix",
-    "source_minhash_similarity",
-    "quality_by_dup_class",
-    "label_centroids",
-    "nearest_centroid_confusion",
-    "gopher_quality_rules",
-    "oov_rate_by_lang",
-    "ngram_entropy_by_source",
-    "quality_calibrated",
-    "image_features",
-    "audio_chunk_features",
-    # r1-floor fill: the r9-tier r1-cohort entries ...
-    "dedup_exact",
-    "minhash_signatures",
-    "simhash_signatures",
-    "knn_numpy_batched",
-    "media_blob_stats",
-    # ... then the r10-tier r1-cohort entries in registration order
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "topk_orders_per_customer",
-    "window_running_spend",
-    "tumbling_hourly",
-    "sliding_10m_5m",
-    "session_windows_30m",
-    "streaming_tumbling_hourly",
-    "stateful_sessionize",
-]
-
-
-#: Round-14 window: GENERATED by ``rotation.round14_window()`` over the
-#: rounds-1..13 ledger (``through_round=13``).  Head (9): the two
-#: round-13 carryovers — the ONLY registered queries with zero driver
-#: rows (VERDICT r13 #1) — then the round's SIX code-path changes:
-#: the IVF broadcast retrofit (F.broadcast(probes) into ann_ivf_topk /
-#: ann_ivf_adaptive / ivf_int8_topk; 2 surviving SMJs → 0/0/1-residual,
-#: plan-pinned in tests/test_plan_quality_round14.py), the
-#: recall-audit subtree reuse (ann_rank_quality / quant_tier_recall
-#: persist the shared emb projection once: 17 parquet scans → 1, wall
-#: 13.4 s → 4.2 s at sf0.1, VERDICT r13 #4), and the funnel's
-#: persisted marker relations (pipeline_drop_attribution: the
-#: quality-score and exact-dup-keeper relations feed two consumers
-#: each — 12 scans → 9, 43 exchanges → 39) — the audits and the
-#: funnel were r8-stale fill entries anyway, so marking them changed
-#: displaces no one.
-#: Pin: pmi_bigrams, the one r8-stale BENCH_r13 driver-gate flag not
-#: already in the window (all three flags adjudicated spurious by the
-#: quiet best-of-5, SCALE.md r14; kmeans_refine_centroids is in the
-#: fill, lang_doc_stats is r11-fresh).  Fill: the NINE twice-deferred
-#: r7 rows lead (VERDICT r13 #2: "they must not defer twice" — this is
-#: their exposure round), then 20 of the 32-entry r8 tier, then the
-#: 15-entry r1 floor pulled from the r10/r11 tiers (no r7/r8 row is
-#: r1-cohort).  The pin displaces ONE r8 entry, doc_repetition_scores
-#: — family mate doc_perplexity_bigram stays in-window (both per-doc
-#: text-statistics scores over documents) — and the floor defers the
-#: eleven newest-registered non-r1 r8 entries (boilerplate_ngrams,
-#: decontaminate_bloom, decontaminate_docs, doc_perplexity,
-#: image_resize, lang_stopword_quality, merge_upsert_orders,
-#: packed_sequences, seq_len_bucket_histogram, snapshot_diff, and the
-#: pin's displacement above), each with an in-window family mate
-#: (gopher_quality_rules' r13 row covers the quality-scan family;
-#: dedup/decon families keep dedup_minhash_pairs /
-#: containment_bottomk_pairs; the media family keeps
-#: video_frame_sample).  All twelve lead the r15 stale fill.
-#: ``tests/test_rotation.py`` pins this literal against
-#: ``rotation.round14_window()``.
-_ROUND14_WINDOW = [
-    # never driver-checked: the two round-13 carryovers (VERDICT r13 #1)
-    "ivf_ce_retrieval",
-    "training_shard_balance_audit",
-    # code paths changed this round (rotation.ROUND14_CHANGED): the IVF
-    # broadcast retrofit trio, the two persist-fixed recall audits, and
-    # the funnel's persisted marker relations (all the same
-    # subtree-reuse discipline; the funnel was an r8 fill entry so its
-    # head move displaces no one)
-    "ann_ivf_topk",
-    "ann_ivf_adaptive",
-    "ivf_int8_topk",
-    "ann_rank_quality",
-    "quant_tier_recall",
-    "pipeline_drop_attribution",
-    # pinned: the r8-stale adjudicated driver-gate flag (VERDICT r13 #3)
-    "pmi_bigrams",
-    # the nine twice-deferred r7 rows drain FIRST (VERDICT r13 #2)
-    "video_frame_sample",
-    "pivot_segment_revenue",
-    "window_order_gaps",
-    "stats_summary",
-    "tfidf_top_terms",
-    "percentile_prices",
-    "nested_customer_profile",
-    "source_mixture_sample",
-    "sliding_chunk_stats",
-    # the r8-stale tier drains (20 of 32 — pin + floor defer 12, above;
-    # pipeline_drop_attribution rides the changed head)
-    "resample_gapfill_hourly",
-    "source_reputation",
-    "training_data_run",
-    "weighted_reservoir_sample",
-    "shuffle_shard_manifest",
-    "retention_cohorts",
-    "streaming_unattributed_purchases",
-    "pair_review_sample",
-    "dup_graph_degree_stats",
-    "containment_bottomk_pairs",
-    "int8_quant_topk",
-    "hard_negative_mining",
-    "embedding_dim_stats",
-    "binary_quant_topk",
-    "kmeans_refine_centroids",
-    "bitext_margin_pairs",
-    "doc_perplexity_bigram",
-    "bm25_search",
-    # r1-floor fill: the r10-tier r1-cohort entries ...
-    "dedup_minhash_pairs",
-    "ngram_jaccard_pairs",
-    "knn_bruteforce",
-    "emb_neardup_pairs",
-    "quality_scores",
-    # ... then the r11-tier r1-cohort entries in registration order
-    "wc",
-    "indexer",
-    "correlated_min_price_parts",
-    "join_left_order_counts",
-    "join_semi_big_spenders",
-    "join_anti_inactive_customers",
-    "agg_rollup_returns",
-    "agg_cube_orders",
-    "distinct_stats",
-]
-
-
 #: Round-15 window: GENERATED by ``rotation.round15_window()`` over the
 #: rounds-1..14 ledger.  Head (10): the two round-14 carryovers — the
 #: only registered queries with zero driver rows (VERDICT r14 #1) —

@@ -1,17 +1,16 @@
-"""Driver-window rotation ledger — generated, not narrated (VERDICT r7 #5).
+"""Driver-window rotation ledger — generated, not narrated.
 
 The external driver records CORRECTNESS rows for only the FIRST 50 entries
 of ``__spark_entry__.queries()``, so the ordering of the window list IS the
-round's correctness coverage.  Through round 7 the rotation rationale was a
-hand-maintained prose comment whose staleness math the judge had to
-re-derive from ``CORRECTNESS_r0*.json``; this module computes it.
+round's correctness coverage.  This module computes that ordering from the
+``CORRECTNESS_r*.json`` ledger.
 
 Standing rotation priority (spark-graft conventions):
 
 1. never-driver-checked (new this round),
 2. queries whose code path changed this round,
-3. explicit pins ordered by the verdict (round 8: ``wc`` + ``indexer``,
-   the reference's own golden pair — ``main/test-mr.sh:78-142``),
+3. explicit pins (e.g. ``wc`` + ``indexer``, the reference's own golden
+   pair — ``main/test-mr.sh:78-142``),
 4. stalest-first fill: ascending latest driver round, round-1-cohort
    members first within a tier (they are the scarce floor resource),
    then registration order,
@@ -21,13 +20,13 @@ Standing rotation priority (spark-graft conventions):
    entry must keep an in-window family mate; the mates are prose in the
    ``__spark_entry__`` window comment, the *math* lives here.
 
-``propose_window`` is pure and deterministic.  ``round9_window()`` binds
-the CURRENT round's parameters (``round8_window()`` remains as the
-historical pin).  ``tests/test_rotation.py`` asserts each pasted
-``_ROUND{N}_WINDOW`` literal equals ``round{N}_window()`` exactly —
-always against the ledger as of round N-1 (``through_round=N-1``) — so
-the window can neither drift from the ledger nor be invalidated by the
-driver landing round N's own CORRECTNESS file.
+``propose_window`` is pure and deterministic.  ``window_for_round(N, ...)``
+runs it over the ledger as of round N-1 (``through_round=N-1``), so the
+driver landing round N's own CORRECTNESS file cannot invalidate the
+window.  ``round15_window()`` is the one committed binding:
+``tests/test_rotation.py`` asserts ``__spark_entry__._ROUND15_WINDOW``
+equals it exactly.  The next round runs the CLI with ``--round N`` and
+its new/changed/pinned names, then replaces the literal and this binding.
 """
 
 from __future__ import annotations
@@ -51,8 +50,8 @@ def latest_rounds(
     from rounds 1..N-1, but the driver lands ``CORRECTNESS_rN.json`` into
     the same directory after the round's last commit, which would
     otherwise mutate the ledger the round-N pin test validates against —
-    a gate that goes red on schedule.  Every ``roundN_window()`` binding
-    must therefore pass ``through_round=N-1``.
+    a gate that goes red on schedule.  ``window_for_round`` therefore
+    passes ``through_round=N-1``.
     """
     latest: dict[str, int] = {}
     for path in sorted(glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
@@ -167,392 +166,25 @@ def validate_window(
     return problems
 
 
-#: Round-8 parameters.  Mid-round additions go into NEW (never-checked
-#: outranks stale); code-path changes go into CHANGED; regenerate and
-#: re-paste ``_ROUND8_WINDOW`` after editing these.
-ROUND8_NEW: tuple[str, ...] = (
-    "pipeline_drop_attribution",
-    "decontaminate_bloom",
-    "binary_quant_topk",
-    "pair_review_sample",
-    "seq_len_bucket_histogram",
-    "quant_tier_recall",
-    "dup_graph_degree_stats",
-    # second mid-round batch
-    "dq_constraint_audit",
-    "snapshot_diff",
-    "bitext_margin_pairs",
-    "neardup_pagerank",
-    "pmi_bigrams",
-    # third mid-round batch
-    "ann_rank_quality",
-    "kmeans_refine_centroids",
-    "weighted_reservoir_sample",
-    "streaming_unattributed_purchases",
-)
-#: Registered late in round 8 but deliberately NOT windowed: the 16-op
-#: head above already displaced one r3-stale commitment (the r1 floor
-#: is binding), so these wait as never-checked entries that lead the
-#: ROUND9_NEW head; until then the local parity suite is their gate.
-ROUND9_NEW_CARRYOVER: tuple[str, ...] = (
-    "robust_quality_outliers",
-    "dup_span_manifest",
-)
-#: training_data_run's mixture/temperature predicates were factored into
-#: _mix_keep_col/_temp_keep_col (shared with the funnel attribution), so
-#: its code path changed this round; containment_bottomk_pairs gained
-#: the df_cap parameter on its candidate index.
-ROUND8_CHANGED: tuple[str, ...] = (
-    "training_data_run",
-    "containment_bottomk_pairs",
-)
-ROUND8_PINS: tuple[str, ...] = ("wc", "indexer")  # VERDICT r7 #1 / r6 #8
-
-
-def round8_window() -> list[str]:
+def window_for_round(
+    round_no: int,
+    *,
+    new: tuple[str, ...] = (),
+    changed: tuple[str, ...] = (),
+    pins: tuple[str, ...] = (),
+) -> list[str]:
+    """Round-N window over the rounds-1..N-1 ledger."""
     return propose_window(
-        latest_rounds(through_round=7),
+        latest_rounds(through_round=round_no - 1),
         r1_cohort(),
         registration_order(),
-        new=ROUND8_NEW,
-        changed=ROUND8_CHANGED,
-        pins=ROUND8_PINS,
+        new=new,
+        changed=changed,
+        pins=pins,
     )
 
 
-#: Round-9 parameters.  The head leads with the two queries registered
-#: late in round 8 that have NEVER had a driver row (rotation carryover,
-#: VERDICT r8 #3); mid-round additions append to NEW; code-path changes
-#: go into CHANGED.  No pins this round: wc/indexer (the reference's
-#: golden pair) are r8-fresh, so the stalest-first fill is the verdict's
-#: entire ask — runtime_filtered_join (the lone r3 row) and the r4-stale
-#: cohort drain naturally.
-ROUND9_NEW: tuple[str, ...] = (
-    *ROUND9_NEW_CARRYOVER,
-    # mid-round additions (round 9, first batch): graph analytics over
-    # the near-dup pair relation, doc-level novelty, the normalization
-    # dedup ladder, tokenizer character-coverage census, session entry
-    # paths, the declarative packing manifest, the quality-filter
-    # ablation cube, and per-label embedding drift
-    "graph_triangle_counts",
-    "rare_ngram_uniqueness",
-    "normalization_ladder",
-    "char_coverage_audit",
-    "session_funnel_paths",
-    "token_budget_pack_plan",
-    "quality_ablation_matrix",
-    "centroid_drift_by_label",
-    # mid-round additions (round 9, second batch): the mergeable-sketch
-    # heavy-hitter audit, cross-lang vocabulary overlap, perceptual image
-    # cluster histogram, and the distributed power-iteration step
-    "cms_heavy_hitters",
-    "lang_vocab_overlap",
-    "image_phash_clusters",
-    "embedding_power_iteration",
-    # third batch: the incremental sketch and the foreachBatch MERGE sink
-    "streaming_cms_cells",
-    "streaming_upsert_snapshot",
-    # fourth batch: the HLL mergeable-sketch twin of the CMS audit
-    "hll_distinct_by_source",
-    # fifth: the user-keyed shuffle-skew census
-    "user_activity_power_law",
-    # sixth: fuzzy record linkage and the streaming HLL half
-    "fuzzy_key_join_customers",
-    "streaming_hll_registers",
-    # seventh: greedy k-center coreset, cross-source quantile
-    # normalization, and the funnel latency distribution
-    "coreset_kcenter_select",
-    "quality_quantile_normalize",
-    "conversion_latency_quantiles",
-)
-#: neardup_pagerank: the persisted ids-only edge relation is now
-#: unpersisted after materialization (ADVICE r8; cache-leak fix).
-#: dq_constraint_audit: the ambiguous published constraint name
-#: 'lineitem_discount_0_010' was renamed to 'lineitem_discount_0_to_0_10'
-#: in both the stack() literal and the SQL oracle (ADVICE r8) — an
-#: output-contract change, so it re-certifies.
-#: image_phash_pairs: refactored into phash_signatures +
-#: phash_pairs_from_sigs so the cluster operator could star-collapse
-#: identical signatures (behavior-identical; re-verified vs oracle).
-ROUND9_CHANGED: tuple[str, ...] = (
-    "neardup_pagerank",
-    "dq_constraint_audit",
-    "image_phash_pairs",
-)
-ROUND9_PINS: tuple[str, ...] = ()
-#: Registered late in round 9 but deliberately NOT windowed (the 26-op
-#: head already defers most of the r4-stale cohort): these two wait as
-#: never-checked entries that lead the ROUND10_NEW head, exactly the
-#: r8 -> r9 carryover precedent; the local parity suite is their gate.
-ROUND10_NEW_CARRYOVER: tuple[str, ...] = (
-    "attribution_model_compare",
-    "rfm_segments",
-)
-
-
-def round9_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=8),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND9_NEW,
-        changed=ROUND9_CHANGED,
-        pins=ROUND9_PINS,
-    )
-
-
-#: Round-10 parameters.  The head leads with the two round-9 carryovers
-#: (the ONLY registered queries with zero driver rows — VERDICT r9 #1),
-#: then the round-10 additions in landing order.
-ROUND10_NEW: tuple[str, ...] = (
-    *ROUND10_NEW_CARRYOVER,
-    # first batch: the tokenizer-and-distribution census trio
-    "bpe_merge_candidates",
-    "zipf_slope_by_lang",
-    "js_divergence_sources",
-    # second batch: decayed counters, item-item CF, k-core peeling
-    "decayed_event_counts",
-    "item_cooccurrence_similarity",
-    "graph_kcore_membership",
-    # third batch: group-level split, Benford audit, clip calibration,
-    # the streaming trending log
-    "source_level_split",
-    "benford_price_audit",
-    "embedding_clip_calibration",
-    "streaming_trending_topk",
-    # fourth batch: market-basket association rules, per-doc TF-IDF
-    # keyword extraction
-    "brand_basket_lift",
-    "doc_keywords_tfidf",
-    # fifth batch: the Heaps'-law corpus-growth audit, the weekday x
-    # hour traffic heatmap
-    "heaps_law_fit",
-    "traffic_seasonality_profile",
-)
-#: quality_ablation_matrix: output-contract change (grouping_id column,
-#: gid-keyed grand total — ADVICE r9); coreset_kcenter_select:
-#: candidate pool now anti-joins selected centers (ADVICE r9).
-ROUND10_CHANGED: tuple[str, ...] = (
-    "quality_ablation_matrix",
-    "coreset_kcenter_select",
-)
-ROUND10_PINS: tuple[str, ...] = ()
-
-
-def round10_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=9),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND10_NEW,
-        changed=ROUND10_CHANGED,
-        pins=ROUND10_PINS,
-    )
-
-
-#: Round-11 parameters.  The head is deliberately SMALL (2 of the 12
-#: round-11 additions): the verdict's binding ask is draining the
-#: 29-entry r5-stale cohort to zero, and the r1 floor must pull its 15
-#: entries from the r7/r8 tiers (no r5/r6 row is r1-cohort), so every
-#: head slot beyond 6 displaces an r5 drain commitment.  The two
-#: windowed additions are the round's flagship (the RAG chunk manifest)
-#: plus the supply-concentration index; the other ten wait as
-#: never-checked carryovers that lead the ROUND12 head (the r8 -> r9 ->
-#: r10 carryover precedent) with the local parity + fuzz suites as
-#: their gate.  (Counts updated per ADVICE r11: the round ultimately
-#: landed 12 additions in three batches.)
-ROUND11_NEW: tuple[str, ...] = (
-    "rag_chunk_manifest",
-    "supplier_hhi_by_nation",
-)
-#: benford_price_audit: chi-square/share feeds re-derived from shared
-#: 9-dp literals with no engine-side POW (ADVICE r10 — the one
-#: CORRECTNESS_r10 hash mismatch); heaps_law_fit: NULLIF degeneracy
-#: guard on the OLS denominator (ADVICE r10); brand_basket_lift: lift
-#: products through DOUBLE on both sides (overflow parity, ADVICE r10);
-#: coreset_kcenter_select: empty-pool break matching the oracle's
-#: fewer-rows behavior (ADVICE r10).
-ROUND11_CHANGED: tuple[str, ...] = (
-    "benford_price_audit",
-    "heaps_law_fit",
-    "brand_basket_lift",
-    "coreset_kcenter_select",
-)
-ROUND11_PINS: tuple[str, ...] = ()
-#: Registered in round 11 but deliberately NOT windowed (see
-#: ROUND11_NEW): never-checked entries that lead the ROUND12 head.
-ROUND12_NEW_CARRYOVER: tuple[str, ...] = (
-    "hapax_richness_by_source",
-    "mutual_information_lang_source",
-    "customer_order_trend",
-    "cohort_ltv_curves",
-    "kfold_assignment_audit",
-    # batch 2 (chunk-level dedup spectrum + script census)
-    "chunk_dup_spectrum",
-    "script_mix_audit",
-    # batch 3 (cadence bot screen, source keyness, context-length curve)
-    "bot_activity_heuristic",
-    "source_keyness_logodds",
-    "context_length_sensitivity",
-)
-
-
-def round11_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=10),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND11_NEW,
-        changed=ROUND11_CHANGED,
-        pins=ROUND11_PINS,
-    )
-
-
-#: Round-12 parameters.  The head is EXACTLY the ten round-11
-#: carryovers (VERDICT r11 #1: the only registered queries with zero
-#: driver rows) and nothing else — no new-op head, no changed list (the
-#: two ADVICE-r11 items were a test addition and docstring count fixes,
-#: neither a code-path change), no pins.  The fill then drains the
-#: 32-entry r6-stale cohort (VERDICT r11 #2); with the 15-entry r1
-#: floor pulling from the r8/r9 tiers (no r6 row is r1-cohort), only
-#: 25 of the 32 fit, so the floor displaces the SEVEN newest-registered
-#: non-r1 r6 entries: approx_distinct_users, approx_percentile_prices,
-#: hotkey_salted_join_revenue, perplexity_tail_split,
-#: quality_drift_by_batch, salted_join_revenue, salted_word_count.
-#: Each keeps an in-window family mate (the prose is in the
-#: ``__spark_entry__`` window comment) and all seven lead the r13
-#: stale fill — the deferral path VERDICT r11 #2 sanctioned ("defer r6
-#: rows with in-window family mates and annotate, as rounds 9–11 did").
-ROUND12_NEW: tuple[str, ...] = ROUND12_NEW_CARRYOVER
-ROUND12_CHANGED: tuple[str, ...] = ()
-ROUND12_PINS: tuple[str, ...] = ()
-#: Registered in round 12 but deliberately NOT windowed (VERDICT r11
-#: #3: new ops are window-neutral while staleness drains): the
-#: shard-level exact-dup manifest and the pair-joint reranker audit
-#: wait as never-checked entries that lead the ROUND13 head, gated
-#: locally by the parity + plan suites.  The SEVEN r6 deferrals listed
-#: above lead the r13 stale fill right after them.
-ROUND13_NEW_CARRYOVER: tuple[str, ...] = (
-    "shard_dup_manifest",
-    "crossencoder_rerank_audit",
-)
-
-
-def round12_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=11),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND12_NEW,
-        changed=ROUND12_CHANGED,
-        pins=ROUND12_PINS,
-    )
-
-
-#: Round-13 parameters.  Head (3): exactly the two round-12 carryovers —
-#: the only registered queries with zero driver rows (VERDICT r12 #1) —
-#: then the round's ONE code-path change: user_activity_power_law's
-#: single-scan rewrite (the BENCH_r12 flag sweep found its grand-total
-#: ev.agg + crossJoin recomputed the whole events->per_user->bucket
-#: subtree — two scans, six exchanges; now one scan, three exchanges,
-#: total via an unpartitioned window over the ~log2(max) bucket rows).
-#: The three ADVICE-r12 items were a test assertion, a CLI default,
-#: and a docstring reword — none a query code path.  No pins.  Fill:
-#: the seven twice-waiting r6 deferrals lead (their second exposure
-#: window — VERDICT r12 #1: "they must not defer twice"), then the
-#: r7-stale cohort.  VERDICT r12's "2 + 7 + 34 = 43" arithmetic
-#: omitted the standing 15-entry r1 floor (2 + 7 + 34 + 15 = 58 > 50,
-#: and no r6/r7 row is r1-cohort), so the floor displaces the NINE
-#: newest-registered non-r1 r7 entries — the same sanctioned
-#: family-mate deferral path rounds 9–12 used; the mates are prose in
-#: the ``__spark_entry__`` window comment and all nine lead the r14
-#: stale fill.
-ROUND13_NEW: tuple[str, ...] = ROUND13_NEW_CARRYOVER
-ROUND13_CHANGED: tuple[str, ...] = ("user_activity_power_law",)
-ROUND13_PINS: tuple[str, ...] = ()
-#: Registered in round 13 but deliberately NOT windowed (VERDICT r12
-#: #3: new ops are window-neutral while staleness drains): the
-#: IVF-retrieve → cross-encoder-rerank composed retrieval op and the
-#: dedup-aware training-shard balance audit (VERDICT r12 #3's two
-#: named candidates) wait as never-checked entries that lead the
-#: ROUND14 head, gated locally by the parity + plan suites.  The NINE
-#: r7 deferrals (see ROUND13_NEW docstring) lead the r14 stale fill
-#: right after them.
-ROUND14_NEW_CARRYOVER: tuple[str, ...] = (
-    "ivf_ce_retrieval",
-    "training_shard_balance_audit",
-)
-
-
-#: Round-14 parameters.  Head (9): the two round-13 carryovers — the
-#: only registered queries with zero driver rows (VERDICT r13 #1) —
-#: then the round's SIX code-path changes, then one pin.  Changed:
-#: the IVF broadcast retrofit (VERDICT r13 #1: F.broadcast(probes)
-#: into ann_ivf_topk / ann_ivf_adaptive / ivf_int8_topk — 2 SMJs
-#: survived AQE pre-retrofit; 0 / 0 / 1-residual after, pinned in
-#: tests/test_plan_quality_round14.py), the recall-audit subtree
-#: reuse (VERDICT r13 #4: ann_rank_quality / quant_tier_recall now
-#: persist the shared emb projection once — 17 parquet scans → 1,
-#: wall 13.4 s → 4.2 s at sf0.1), and the funnel's persisted marker
-#: relations (pipeline_drop_attribution, second wave) — the audits
-#: and the funnel were r8-stale fill entries anyway, so marking them
-#: changed reorders the window without displacing anyone.
-#: Pin: pmi_bigrams — one of the three BENCH_r13
-#: driver-gate flags (all adjudicated spurious, SCALE.md r14), r8-
-#: stale, so it needs a fresh driver row (VERDICT r13 #3); the other
-#: two flagged names are kmeans_refine_centroids (in the fill as r8-
-#: stale) and lang_doc_stats (r11-fresh).  Fill: the NINE twice-
-#: deferred r7 rows lead (VERDICT r13 #2: "they must not defer
-#: twice"), then 20 of the r8 tier; the 15-entry r1 floor pulls from
-#: the r10/r11 tiers.  The pin displaces ONE r8 entry,
-#: doc_repetition_scores — family mate doc_perplexity_bigram stays
-#: in-window (both per-doc text-statistics scores over documents) —
-#: which leads the r15 stale fill with the other eleven r8 deferrals.
-ROUND14_NEW: tuple[str, ...] = ROUND14_NEW_CARRYOVER
-ROUND14_CHANGED: tuple[str, ...] = (
-    "ann_ivf_topk",
-    "ann_ivf_adaptive",
-    "ivf_int8_topk",
-    "ann_rank_quality",
-    "quant_tier_recall",
-    # second wave (same round, same subtree-reuse discipline): the
-    # funnel's quality-score and exact-dup-keeper marker relations are
-    # persisted once for their two consumers each (12 scans → 9,
-    # 43 exchanges → 39 at sf0.1); it was already an r8 fill entry, so
-    # the head move displaces no one
-    "pipeline_drop_attribution",
-)
-ROUND14_PINS: tuple[str, ...] = ("pmi_bigrams",)
-#: Registered in round 14 but deliberately NOT windowed (VERDICT r13
-#: #5: new ops are window-neutral while staleness drains): the two
-#: tuning-table compositions — the IVF probe-budget recall/scan curve
-#: (ivf_probe_recall_curve, the full n_probe=1..C trade table from one
-#: pass over the certified walk/assignment machinery) and the LSH
-#: est-threshold precision/recall sweep (lsh_threshold_sweep, a
-#: broadcast 16-row grid over minhash_calibration's bounded pair
-#: relation) — wait as never-checked entries that lead the ROUND15
-#: head, gated locally by the parity + plan suites.  The ELEVEN
-#: fill-displaced r8 deferrals (see the __spark_entry__ window
-#: comment; pmi_bigrams itself rides the r14 head pin) lead the r15
-#: stale fill right after them.
-ROUND15_NEW_CARRYOVER: tuple[str, ...] = (
-    "ivf_probe_recall_curve",
-    "lsh_threshold_sweep",
-)
-
-
-def round14_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=13),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND14_NEW,
-        changed=ROUND14_CHANGED,
-        pins=ROUND14_PINS,
-    )
-
-
-#: Round-15 parameters.  Head: the two round-14 carryovers — the only
+#: Round-15 parameters.  Head: the two round-14 additions — the only
 #: registered queries with zero driver rows (VERDICT r14 #1) — then the
 #: round's EIGHT code-path changes, no pins.  Changed: the measured
 #: subtree-reuse wave 2 (VERDICT r14 #2: single-tokenization DSIR pair,
@@ -566,13 +198,15 @@ def round14_window() -> list[str]:
 #: r14 #6 — its BLAS assignment pass previously executed three times).
 #: The with_shared_caches hardening (VERDICT r14 #4) is Python-side
 #: metadata only — no plan, result, or execution change — so handle-only
-#: ops are NOT marked changed (the r13 precedent for non-query-path
-#: edits); the registry-wide accounting test is their gate.  Fill: the
-#: twelve r8 deferrals lead (VERDICT r14 #1: eleven fill-displaced +
-#: the pin-displaced doc_repetition_scores — "they must not defer
-#: twice"), then the r9 tier; the 15-entry r1 floor pulls from the
-#: r11/r12 tiers.
-ROUND15_NEW: tuple[str, ...] = ROUND15_NEW_CARRYOVER
+#: ops are NOT marked changed; the registry-wide accounting test is
+#: their gate.  Fill: the twelve r8 deferrals lead (VERDICT r14 #1:
+#: eleven fill-displaced + the pin-displaced doc_repetition_scores —
+#: "they must not defer twice"), then the r9 tier; the 15-entry r1
+#: floor pulls from the r11/r12 tiers.
+ROUND15_NEW: tuple[str, ...] = (
+    "ivf_probe_recall_curve",
+    "lsh_threshold_sweep",
+)
 ROUND15_CHANGED: tuple[str, ...] = (
     "ann_ivf_topk",
     "pq_residual_topk",
@@ -590,84 +224,21 @@ ROUND15_CHANGED: tuple[str, ...] = (
 # CHANGED registration — adding it here would displace a fill row the
 # pinned head tests forbid.
 ROUND15_PINS: tuple[str, ...] = ()
-#: Registered in round 15 but deliberately NOT windowed (VERDICT r14
-#: #7: new ops are window-neutral while staleness drains): the
-#: adaptive-mass tuning table — the PROBE_MASS trade curve completing
-#: the tuning-table family (threshold sweep / probe curve / mass
-#: curve) — waits as a never-checked entry that leads the ROUND16
-#: head, gated locally by the parity + plan suites.  The SEVENTEEN
-#: fill-displaced r9 deferrals (see the __spark_entry__ window
-#: comment) lead the r16 stale fill right after it.
-ROUND16_NEW_CARRYOVER: tuple[str, ...] = (
-    "ivf_mass_recall_curve",
-)
 
 
 def round15_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=14),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND15_NEW,
-        changed=ROUND15_CHANGED,
-        pins=ROUND15_PINS,
+    return window_for_round(
+        15, new=ROUND15_NEW, changed=ROUND15_CHANGED, pins=ROUND15_PINS
     )
 
 
-def round13_window() -> list[str]:
-    return propose_window(
-        latest_rounds(through_round=12),
-        r1_cohort(),
-        registration_order(),
-        new=ROUND13_NEW,
-        changed=ROUND13_CHANGED,
-        pins=ROUND13_PINS,
-    )
-
-
-#: Every committed round binding, newest last — the CLI's no-flag
-#: default is ALWAYS the newest entry here, so the help text and the
-#: default can no longer go stale when a new round lands (ADVICE r12).
-COMMITTED_WINDOWS: dict[int, object] = {
-    8: round8_window,
-    9: round9_window,
-    10: round10_window,
-    11: round11_window,
-    12: round12_window,
-    13: round13_window,
-    14: round14_window,
-    15: round15_window,
-}
-
-
-def window_for_round(
-    round_no: int,
-    *,
-    new: tuple[str, ...] = (),
-    changed: tuple[str, ...] = (),
-    pins: tuple[str, ...] = (),
-) -> list[str]:
-    """Generic round-N window over the rounds-1..N-1 ledger — what the
-    next round's builder calls (via the CLI below) before any
-    ROUND{N}_* constants exist in this file."""
-    return propose_window(
-        latest_rounds(through_round=round_no - 1),
-        r1_cohort(),
-        registration_order(),
-        new=new,
-        changed=changed,
-        pins=pins,
-    )
-
-
-def main() -> None:  # pragma: no cover - CLI convenience
+def main() -> None:
     import argparse
 
-    newest = max(COMMITTED_WINDOWS)
     ap = argparse.ArgumentParser(
         description="Generate a driver-window proposal from the "
-        "CORRECTNESS ledger.  With no flags, prints the NEWEST committed "
-        f"round's window (currently round {newest})."
+        "CORRECTNESS ledger.  With no flags, prints the committed "
+        "round-15 window."
     )
     ap.add_argument("--round", type=int, default=None,
                     help="round number N; ledger bound = N-1")
@@ -681,7 +252,7 @@ def main() -> None:  # pragma: no cover - CLI convenience
         return tuple(x for x in v.split(",") if x)
 
     if args.round is None:
-        round_no, window = newest, COMMITTED_WINDOWS[newest]()
+        round_no, window = 15, round15_window()
     else:
         round_no = args.round
         window = window_for_round(

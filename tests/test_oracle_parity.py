@@ -9,6 +9,8 @@ import pytest
 import __spark_entry__ as entry_mod
 from tests.oracle import compare, duck_connection
 
+pytestmark = pytest.mark.driver
+
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
 

@@ -1,131 +1,31 @@
 """The driver window is generated, not narrated (VERDICT r7 #5).
 
-Each ``_ROUND{N}_WINDOW`` literal in ``__spark_entry__.py`` must equal
-the output of ``tools/rotation.round{N}_window()`` exactly, and satisfy
-the standing invariants (size 50, unique, registered, ≥15 r1-cohort
-entries).  No Spark session needed — pure ledger math over
-CORRECTNESS_r0*.json.
+``_ROUND15_WINDOW`` in ``__spark_entry__.py`` must equal
+``tools/rotation.round15_window()`` exactly, and satisfy the standing
+invariants (size 50, unique, registered, ≥15 r1-cohort entries).  No
+Spark session needed — pure ledger math over CORRECTNESS_r*.json.
 
-Each round-N pin binds ``through_round=N-1`` (VERDICT r8 #1): the
-window was generated from the rounds-1..N-1 ledger, and the driver's
-own ``CORRECTNESS_rN.json`` lands after the round's last commit, so an
-unbounded glob would validate the window against a ledger that didn't
-exist when it was generated — red on schedule every round.
+The round-15 binding reads the ledger ``through_round=14`` (VERDICT r8
+#1): the window was generated from the rounds-1..14 ledger, and the
+driver's own ``CORRECTNESS_r15.json`` landed after the round's last
+commit, so an unbounded glob would validate the window against a ledger
+that didn't exist when it was generated.
 """
 
 from __future__ import annotations
 
+import sys
+
+import pytest
+
 import __spark_entry__ as entry_mod
 from golang_mapreduce_spark.tools import rotation
 
-
-def test_round8_window_matches_ledger():
-    """Historical pin: the r8 window against the r1–r7 ledger state."""
-    problems = rotation.validate_window(
-        entry_mod._ROUND8_WINDOW,
-        rotation.latest_rounds(through_round=7),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND8_NEW,
-        changed=rotation.ROUND8_CHANGED,
-        pins=rotation.ROUND8_PINS,
-    )
-    assert problems == []
-
-
-def test_round9_window_matches_ledger():
-    problems = rotation.validate_window(
-        entry_mod._ROUND9_WINDOW,
-        rotation.latest_rounds(through_round=8),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND9_NEW,
-        changed=rotation.ROUND9_CHANGED,
-        pins=rotation.ROUND9_PINS,
-    )
-    assert problems == []
-
-
-def test_round10_window_matches_ledger():
-    problems = rotation.validate_window(
-        entry_mod._ROUND10_WINDOW,
-        rotation.latest_rounds(through_round=9),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND10_NEW,
-        changed=rotation.ROUND10_CHANGED,
-        pins=rotation.ROUND10_PINS,
-    )
-    assert problems == []
-
-
-def test_round11_window_matches_ledger():
-    problems = rotation.validate_window(
-        entry_mod._ROUND11_WINDOW,
-        rotation.latest_rounds(through_round=10),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND11_NEW,
-        changed=rotation.ROUND11_CHANGED,
-        pins=rotation.ROUND11_PINS,
-    )
-    assert problems == []
-
-
-def test_round12_window_matches_ledger():
-    problems = rotation.validate_window(
-        entry_mod._ROUND12_WINDOW,
-        rotation.latest_rounds(through_round=11),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND12_NEW,
-        changed=rotation.ROUND12_CHANGED,
-        pins=rotation.ROUND12_PINS,
-    )
-    assert problems == []
-
-
-def test_round14_window_matches_ledger():
-    problems = rotation.validate_window(
-        entry_mod._ROUND14_WINDOW,
-        rotation.latest_rounds(through_round=13),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND14_NEW,
-        changed=rotation.ROUND14_CHANGED,
-        pins=rotation.ROUND14_PINS,
-    )
-    assert problems == []
-
-
-def test_round14_head_is_carryovers_then_changed_then_pin():
-    """VERDICT r13 #1: the two round-13 carryovers — the only
-    registered queries with zero driver rows — lead; then the six
-    changed paths (the IVF broadcast retrofit trio, the two
-    persist-fixed recall audits, and the funnel's persisted marker
-    relations); then the pinned r8-stale adjudicated flag; then the
-    nine twice-deferred r7 rows drain immediately (they must not
-    defer twice)."""
-    assert entry_mod._ROUND14_WINDOW[:2] == list(rotation.ROUND14_NEW_CARRYOVER)
-    assert rotation.ROUND14_NEW == rotation.ROUND14_NEW_CARRYOVER
-    assert rotation.ROUND14_CHANGED == (
-        "ann_ivf_topk",
-        "ann_ivf_adaptive",
-        "ivf_int8_topk",
-        "ann_rank_quality",
-        "quant_tier_recall",
-        "pipeline_drop_attribution",
-    )
-    assert entry_mod._ROUND14_WINDOW[2:8] == list(rotation.ROUND14_CHANGED)
-    assert rotation.ROUND14_PINS == ("pmi_bigrams",)
-    assert entry_mod._ROUND14_WINDOW[8] == "pmi_bigrams"
-    assert set(entry_mod._ROUND14_WINDOW[9:18]) == ROUND13_DEFERRED_R7
+pytestmark = pytest.mark.driver
 
 
 #: The twelve r8 rows the r1 floor plus the pmi_bigrams pin displaced
-#: from the round-14 fill — each annotated with an in-window family
-#: mate in the __spark_entry__ window comment (the deferral path
-#: rounds 9–13 sanctioned); they lead the r15 stale fill.
+#: from the round-14 fill; they lead the r15 stale fill.
 ROUND14_DEFERRED_R8 = {
     "boilerplate_ngrams",
     "decontaminate_bloom",
@@ -140,36 +40,6 @@ ROUND14_DEFERRED_R8 = {
     "seq_len_bucket_histogram",
     "snapshot_diff",
 }
-
-
-def test_round14_drains_r7_fully_and_r8_except_the_annotated_twelve():
-    """VERDICT r13 #2's acceptance: after round 14 no ledger row may be
-    older than r8, and every r8-latest query is in-window EXCEPT
-    exactly the eleven the floor/pin displaced (pmi_bigrams itself
-    rides the head pin) — no silent growth of the deferred set."""
-    latest = rotation.latest_rounds(through_round=13)
-    window = set(entry_mod._ROUND14_WINDOW)
-    r7_stale = {n for n, v in latest.items() if v <= 7}
-    assert r7_stale <= window, sorted(r7_stale - window)
-    r8_stale = {n for n, v in latest.items() if v == 8}
-    deferred = r8_stale - window
-    assert deferred == ROUND14_DEFERRED_R8 - {"pmi_bigrams"}, sorted(
-        deferred ^ (ROUND14_DEFERRED_R8 - {"pmi_bigrams"})
-    )
-
-
-def test_round14_carryovers_are_registered_and_oracle_backed():
-    """The round-14 additions must be registered, oracle-backed, and
-    genuinely never driver-checked — they lead the ROUND15 head (the
-    standing carryover contract, VERDICT r13 #5)."""
-    latest = rotation.latest_rounds(through_round=13)
-    oracles = entry_mod.oracle_sql()
-    queries = entry_mod.queries()
-    for name in rotation.ROUND15_NEW_CARRYOVER:
-        assert name in queries, name
-        assert name in oracles, name
-        assert name not in latest, name
-        assert name not in entry_mod._ROUND14_WINDOW, name
 
 
 def test_round15_window_matches_ledger():
@@ -193,8 +63,11 @@ def test_round15_head_is_carryovers_then_changed():
     audit, the single-tokenization DSIR pair, the persisted-basket
     association rules); no pins; then the eleven deferred r8 rows
     drain immediately (they must not defer twice)."""
-    assert entry_mod._ROUND15_WINDOW[:2] == list(rotation.ROUND15_NEW_CARRYOVER)
-    assert rotation.ROUND15_NEW == rotation.ROUND15_NEW_CARRYOVER
+    assert rotation.ROUND15_NEW == (
+        "ivf_probe_recall_curve",
+        "lsh_threshold_sweep",
+    )
+    assert entry_mod._ROUND15_WINDOW[:2] == list(rotation.ROUND15_NEW)
     assert rotation.ROUND15_CHANGED == (
         "ann_ivf_topk",
         "pq_residual_topk",
@@ -253,165 +126,6 @@ def test_round15_drains_r8_fully_and_r9_except_the_annotated_seventeen():
     )
 
 
-def test_round13_window_matches_ledger():
-    problems = rotation.validate_window(
-        entry_mod._ROUND13_WINDOW,
-        rotation.latest_rounds(through_round=12),
-        rotation.r1_cohort(),
-        rotation.registration_order(),
-        new=rotation.ROUND13_NEW,
-        changed=rotation.ROUND13_CHANGED,
-        pins=rotation.ROUND13_PINS,
-    )
-    assert problems == []
-
-
-def test_round13_head_is_carryovers_then_the_one_changed_path():
-    """VERDICT r12 #1: the two round-12 carryovers — the only registered
-    queries with zero driver rows — lead the window; the single
-    changed-path entry (user_activity_power_law's flag-sweep plan fix)
-    follows; the seven twice-waiting r6 deferrals drain immediately
-    after (they must not defer twice)."""
-    assert entry_mod._ROUND13_WINDOW[:2] == list(rotation.ROUND13_NEW_CARRYOVER)
-    assert rotation.ROUND13_NEW == rotation.ROUND13_NEW_CARRYOVER
-    assert rotation.ROUND13_CHANGED == ("user_activity_power_law",)
-    assert entry_mod._ROUND13_WINDOW[2] == "user_activity_power_law"
-    assert rotation.ROUND13_PINS == ()
-    assert set(entry_mod._ROUND13_WINDOW[3:10]) == ROUND12_DEFERRED_R6
-
-
-#: The nine r7 rows the r1 floor (plus the one-slot changed-path head
-#: growth) displaced from the round-13 fill — each annotated with an
-#: in-window family mate in the __spark_entry__ window comment (the
-#: deferral path rounds 9–12 sanctioned); they lead the r14 stale fill.
-ROUND13_DEFERRED_R7 = {
-    "nested_customer_profile",
-    "percentile_prices",
-    "pivot_segment_revenue",
-    "sliding_chunk_stats",
-    "source_mixture_sample",
-    "stats_summary",
-    "tfidf_top_terms",
-    "window_order_gaps",
-    "video_frame_sample",
-}
-
-
-def test_round13_drains_r6_fully_and_r7_except_the_annotated_nine():
-    """VERDICT r12 #1's acceptance with the standing floor fallback:
-    after round 13 no ledger row may be older than r7, and every
-    r7-latest query is in-window EXCEPT exactly the nine the floor and
-    head displaced — no silent growth of the deferred set."""
-    latest = rotation.latest_rounds(through_round=12)
-    window = set(entry_mod._ROUND13_WINDOW)
-    r6_stale = {n for n, v in latest.items() if v <= 6}
-    assert r6_stale <= window, sorted(r6_stale - window)
-    r7_stale = {n for n, v in latest.items() if v == 7}
-    deferred = r7_stale - window
-    assert deferred == ROUND13_DEFERRED_R7, sorted(
-        deferred ^ ROUND13_DEFERRED_R7
-    )
-
-
-def test_round13_carryovers_are_registered_and_oracle_backed():
-    """The round-13 addition must be registered, oracle-backed, and
-    genuinely never driver-checked — it leads the ROUND14 head (the
-    standing carryover contract, VERDICT r12 #3)."""
-    latest = rotation.latest_rounds(through_round=12)
-    oracles = entry_mod.oracle_sql()
-    queries = entry_mod.queries()
-    for name in rotation.ROUND14_NEW_CARRYOVER:
-        assert name in queries, name
-        assert name in oracles, name
-        assert name not in latest, name
-        assert name not in entry_mod._ROUND13_WINDOW, name
-
-
-def test_round12_head_is_exactly_the_carryovers():
-    """VERDICT r11 #1: the ten round-11 carryovers — the only registered
-    queries with zero driver rows — lead the window, and nothing else
-    joins the head (near-zero new-op head, the r11 arithmetic)."""
-    assert entry_mod._ROUND12_WINDOW[:10] == list(rotation.ROUND12_NEW_CARRYOVER)
-    assert rotation.ROUND12_NEW == rotation.ROUND12_NEW_CARRYOVER
-    assert rotation.ROUND12_CHANGED == ()
-    assert rotation.ROUND12_PINS == ()
-
-
-#: The seven r6 rows the r1 floor displaced from the round-12 fill —
-#: each annotated with an in-window family mate in the __spark_entry__
-#: window comment (the deferral path VERDICT r11 #2 sanctioned); they
-#: lead the r13 stale fill.
-ROUND12_DEFERRED_R6 = {
-    "approx_distinct_users",
-    "approx_percentile_prices",
-    "hotkey_salted_join_revenue",
-    "perplexity_tail_split",
-    "quality_drift_by_batch",
-    "salted_join_revenue",
-    "salted_word_count",
-}
-
-
-def test_round12_drains_the_r6_cohort_except_the_annotated_seven():
-    """VERDICT r11 #2's acceptance with its sanctioned fallback: every
-    r6-latest query is in-window EXCEPT exactly the seven the floor
-    displaced — no silent growth of the deferred set."""
-    latest = rotation.latest_rounds(through_round=11)
-    r6_stale = {n for n, v in latest.items() if v <= 6}
-    deferred = r6_stale - set(entry_mod._ROUND12_WINDOW)
-    assert deferred == ROUND12_DEFERRED_R6, sorted(
-        deferred ^ ROUND12_DEFERRED_R6
-    )
-
-
-def test_round12_carryovers_are_registered_and_oracle_backed():
-    """The two round-12 additions must be registered, oracle-backed,
-    and genuinely never driver-checked — they lead the ROUND13 head
-    (the standing carryover contract, VERDICT r11 #3)."""
-    latest = rotation.latest_rounds(through_round=11)
-    oracles = entry_mod.oracle_sql()
-    queries = entry_mod.queries()
-    for name in rotation.ROUND13_NEW_CARRYOVER:
-        assert name in queries, name
-        assert name in oracles, name
-        assert name not in latest, name
-        assert name not in entry_mod._ROUND12_WINDOW, name
-
-
-def test_round11_drains_the_r5_cohort():
-    """VERDICT r10 #1's acceptance: after round 11 lands, no ledger row
-    may be older than r6 — every r5-latest query must be in-window."""
-    latest = rotation.latest_rounds(through_round=10)
-    r5_stale = {n for n, v in latest.items() if v <= 5}
-    assert r5_stale <= set(entry_mod._ROUND11_WINDOW), sorted(
-        r5_stale - set(entry_mod._ROUND11_WINDOW)
-    )
-
-
-def test_round11_carryovers_are_registered_and_oracle_backed():
-    """The ten unwindowed round-11 additions must be registered,
-    oracle-backed, and genuinely never-checked — they lead the ROUND12
-    head (the standing carryover contract)."""
-    latest = rotation.latest_rounds(through_round=10)
-    oracles = entry_mod.oracle_sql()
-    queries = entry_mod.queries()
-    for name in rotation.ROUND12_NEW_CARRYOVER:
-        assert name in queries, name
-        assert name in oracles, name
-        assert name not in latest, name
-        assert name not in entry_mod._ROUND11_WINDOW, name
-
-
-def test_round10_drains_the_r4_cohort():
-    """VERDICT r9 #1's acceptance: after round 10 lands, no ledger row
-    may be older than r5 — every r4-latest query must be in-window."""
-    latest = rotation.latest_rounds(through_round=9)
-    r4_stale = {n for n, v in latest.items() if v <= 4}
-    assert r4_stale <= set(entry_mod._ROUND10_WINDOW), sorted(
-        r4_stale - set(entry_mod._ROUND10_WINDOW)
-    )
-
-
 def test_through_round_bounds_the_ledger():
     """A later round's artifact must not leak into an earlier cutoff."""
     full = rotation.latest_rounds()
@@ -425,6 +139,7 @@ def test_window_leads_registration():
     """queries() must serve the CURRENT window names first, in order."""
     names = list(entry_mod.queries())
     assert names[: len(entry_mod._ROUND15_WINDOW)] == entry_mod._ROUND15_WINDOW
+    assert list(entry_mod.oracle_sql())[:50] == entry_mod._ROUND15_WINDOW
 
 
 def test_every_window_query_is_oracle_backed():
@@ -433,12 +148,15 @@ def test_every_window_query_is_oracle_backed():
     assert missing == []
 
 
-def test_cli_default_round_is_the_newest_binding():
-    """ADVICE r12: the CLI's no-flag default must track the newest
-    committed round binding so it cannot go stale again."""
-    newest = max(rotation.COMMITTED_WINDOWS)
-    assert newest == 15
-    assert rotation.COMMITTED_WINDOWS[newest] is rotation.round15_window
+def test_cli_prints_the_current_window(monkeypatch, capsys):
+    """The CLI's no-flag default is the committed window, so it cannot
+    go stale while ``_ROUND15_WINDOW`` is what the driver sees."""
+    monkeypatch.setattr(sys, "argv", ["golang_mapreduce_spark.tools.rotation"])
+    rotation.main()
+    out = capsys.readouterr().out.splitlines()
+    assert out[0] == "# round-15 window (50 entries, 15 r1-cohort)"
+    names = [line.split()[0] for line in out[1:51]]
+    assert names == entry_mod._ROUND15_WINDOW
 
 
 def test_floor_enforcement_is_deterministic():

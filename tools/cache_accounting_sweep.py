@@ -15,7 +15,7 @@ import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 from golang_mapreduce_spark.session import get_session  # noqa: E402
