@@ -17,6 +17,20 @@ from pyspark.sql import SparkSession
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 EXECUTOR_PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
 
+#: The engine's committed jar: ``jvm/PosixLocalFileSystem.java``, built by
+#: ``python -m golang_mapreduce_spark.tools.build_jvm``.
+JVM_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "posix-localfs.jar"
+)
+#: Path confs that get_session puts the engine's own entry first on.
+PATH_ENTRIES = {
+    EXECUTOR_PYTHONPATH_KEY: PACKAGE_PARENT,
+    "spark.driver.extraClassPath": JVM_JAR,
+    "spark.executor.extraClassPath": JVM_JAR,
+}
+FILE_FS_IMPL_KEY = "spark.hadoop.fs.file.impl"
+POSIX_LOCAL_FS = "golang_mapreduce_spark.jvm.PosixLocalFileSystem"
+
 CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 FS_CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -67,13 +81,21 @@ DEFAULT_CONF = {
     # path without libhadoop forks a ``readlink`` per getFileLinkStatus:
     # 114-160 per warm pass of perfbench's three stream_drains queries on
     # local[4] (4-vCPU VM), and none with the FileSystem-API manager,
-    # which cut that pass's CPU time by a third.  Hadoop still forks a
-    # ``chmod`` per file it creates (about 80 per such pass).  The
-    # FileSystem-API manager renames with POSIX rename(2), which is
-    # atomic on a local disk, and keeps Hadoop's .crc files and Spark's
-    # checkpoint checksums.  Sessions the engine did not build get the
-    # same value from ensure_session_invariants(checkpoints=True).
+    # which cut that pass's CPU time by a third.  The FileSystem-API
+    # manager renames with POSIX rename(2), which is atomic on a local
+    # disk, and keeps Hadoop's .crc files and Spark's checkpoint
+    # checksums.  Sessions the engine did not build get the same value
+    # from ensure_session_invariants(checkpoints=True).
     CHECKPOINT_FILE_MANAGER_KEY: FS_CHECKPOINT_FILE_MANAGER,
+    # Without libhadoop, Hadoop's local filesystem also forks a ``chmod``
+    # for every file, .crc sidecar and directory it creates with a
+    # permission: 150-170 per warm pass of the same three drains.
+    # PosixLocalFileSystem sets the same mode bits through java.nio
+    # instead.  Its class is in JVM_JAR, which get_session puts on the
+    # class paths, so sessions the engine did not build cannot load it
+    # and keep Spark's default ``file:`` filesystem:
+    # ensure_session_invariants never writes this key.
+    FILE_FS_IMPL_KEY: POSIX_LOCAL_FS,
 }
 
 
@@ -210,12 +232,12 @@ def get_session(
     )
     if extra_conf:
         conf.update(extra_conf)
-    # Python workers import this package to run its UDFs; put it first on
-    # their path so they find it from any launch directory, keeping any
-    # path the caller gives.
-    conf[EXECUTOR_PYTHONPATH_KEY] = os.pathsep.join(
-        p for p in (PACKAGE_PARENT, conf.get(EXECUTOR_PYTHONPATH_KEY)) if p
-    )
+    # Python workers import this package to run its UDFs, and the JVMs
+    # load PosixLocalFileSystem from JVM_JAR: put each first on its path,
+    # so it is found from any launch directory, keeping any path the
+    # caller gives.
+    for key, entry in PATH_ENTRIES.items():
+        conf[key] = os.pathsep.join(p for p in (entry, conf.get(key)) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

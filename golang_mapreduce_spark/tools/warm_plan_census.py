@@ -1,10 +1,12 @@
 """Warm-cache plan census: force the query once (materializes its
 persists), then explain a FRESH instance — the plan the run's later
-stages actually see. Usage: python -m golang_mapreduce_spark.tools.warm_plan_census <sfdir> <op...>; env GMRS_REPO."""
+stages actually see. Usage, from the checkout's root:
+python -m golang_mapreduce_spark.tools.warm_plan_census <sfdir> <op...>;
+env GMRS_PLAN_OUT=<dir> also writes each plan to <dir>/<op>_<tag>.txt,
+with <tag> from GMRS_TAG (default warm)."""
 import io, os, re, sys
 from collections import Counter
 from contextlib import redirect_stdout
-sys.path.insert(0, os.environ.get("GMRS_REPO", "/root/repo"))
 from pyspark.sql import SparkSession
 import __spark_entry__ as E
 sf, *names = sys.argv[1:]

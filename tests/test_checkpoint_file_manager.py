@@ -1,18 +1,23 @@
-"""Stream-drain checkpoints go through Hadoop's FileSystem API.
+"""Stream-drain checkpoints are written without forking a process.
 
-Spark's default checkpoint file manager renames through Hadoop's
-FileContext, which on a local path without libhadoop forks a
-``readlink`` process per getFileLinkStatus call: about 30 per
-stream-stream join drain.  The engine pins the FileSystem-API manager
-(``session.DEFAULT_CONF``, plus a guarded pin for sessions it did not
-build), and every drain goes through ``jobs.drain_available_now``, which
-also drops the memory sink's temp view once the drained frame is
+Without libhadoop, Hadoop's local filesystem forks helpers: Spark's
+default checkpoint file manager renames through FileContext, which forks
+a ``readlink`` per getFileLinkStatus call (about 30 per stream-stream
+join drain), and ``RawLocalFileSystem.setPermission`` forks a ``chmod``
+for every file, ``.crc`` sidecar and directory created with a permission
+(about 170 per pass of perfbench's three stream_drains drains).  The
+engine pins the FileSystem-API manager (``session.DEFAULT_CONF``, plus a
+guarded pin for sessions it did not build), and ``get_session`` sets
+``fs.file.impl`` to ``PosixLocalFileSystem``, which sets permissions
+through java.nio.  Every drain goes through ``jobs.drain_available_now``,
+which also drops the memory sink's temp view once the drained frame is
 resolved."""
 
 from __future__ import annotations
 
 import os
 import threading
+from collections import Counter
 
 import pytest
 
@@ -47,30 +52,45 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
+#: perfbench's stream_drains workload: drain -> its DuckDB oracle.
+STREAM_DRAINS = {
+    "streaming_cms_cells": jobs.ORACLES["streaming_cms_cells"],
+    "streaming_click_attribution": jobs.CLICK_ATTRIBUTION_SQL,
+    "streaming_tumbling_hourly": jobs.ORACLES["streaming_tumbling_hourly"],
+}
+FORKED_HELPERS = ("chmod", "readlink")
+
+
 @pytest.mark.skipif(not os.path.isdir("/proc"), reason="needs procfs")
-def test_click_attribution_drain_forks_no_readlink(spark, sf_dir):
+def test_stream_drains_fork_no_chmod_or_readlink(spark, sf_dir):
     jvm_pid = int(spark.sparkContext._jvm.ProcessHandle.current().pid())
-    readlinks: set[int] = set()
-    stop = threading.Event()
+    con = duck_connection(sf_dir)
+    forks: dict[str, dict[int, str]] = {}
+    for name, oracle in STREAM_DRAINS.items():
+        seen = forks[name] = {}
+        stop = threading.Event()
 
-    def poll():
-        while not stop.is_set():
-            readlinks.update(
-                pid
-                for pid, comm in _child_commands(jvm_pid).items()
-                if comm == "readlink"
-            )
+        def poll():
+            while not stop.is_set():
+                seen.update(
+                    (pid, comm)
+                    for pid, comm in _child_commands(jvm_pid).items()
+                    if comm in FORKED_HELPERS
+                )
 
-    poller = threading.Thread(target=poll, daemon=True)
-    poller.start()
-    try:
-        out = jobs.streaming_click_attribution(spark, sf_dir)
-    finally:
-        stop.set()
-        poller.join(timeout=30)
-    assert not poller.is_alive()
-    assert not readlinks, f"drain forked {len(readlinks)} readlink processes"
-    compare(out, duck_connection(sf_dir), jobs.CLICK_ATTRIBUTION_SQL, "clicks")
+        poller = threading.Thread(target=poll, daemon=True)
+        poller.start()
+        try:
+            out = getattr(jobs, name)(spark, sf_dir)
+        finally:
+            stop.set()
+            poller.join(timeout=30)
+        assert not poller.is_alive()
+        compare(out, con, oracle, name)
+    forked = {
+        name: Counter(seen.values()) for name, seen in forks.items() if seen
+    }
+    assert not forked, f"drains forked helper processes: {forked}"
 
 
 def test_unbuilt_session_gets_pin_on_first_drain_only(spark, sf_dir, monkeypatch):
