@@ -20,7 +20,9 @@ import shutil
 import tempfile
 import threading
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,15 +65,29 @@ def events_ts_layout(spark: SparkSession, events_path: str) -> T.DataType:
     return spark.read.parquet(events_path).schema["ts"].dataType
 
 
+def table_stream(
+    spark: SparkSession, sf_dir: str, table: str, schema: T.StructType
+) -> DataFrame:
+    """File-source stream over one fixture table, in either layout: a
+    Spark-written directory of part files (scalegen outputs) is the
+    source path itself; a single ``{table}.parquet`` file is read as
+    ``sf_dir`` filtered to that name, because the file source lists a
+    directory and rejects a file path ("Option 'basePath' must be a
+    directory")."""
+    path = f"{sf_dir}/{table}.parquet"
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(path):
+        return reader.parquet(path)
+    return reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture, ts normalized to the
     session-TZ timestamp type across fixture layouts."""
     ensure_session_invariants(spark, events=True)
     ts_type = events_ts_layout(spark, f"{sf_dir}/events.parquet")
     return normalize_events_ts(
-        spark.readStream.schema(events_stream_schema(ts_type))
-        .option("pathGlobFilter", "events.parquet")  # file source needs a dir
-        .parquet(sf_dir)
+        table_stream(spark, sf_dir, "events", events_stream_schema(ts_type))
     )
 
 
@@ -100,8 +116,8 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFr
 #: halves streaming_cms_cells (5.3 s -> 2.3 s) and
 #: streaming_trending_topk (4.7 s -> 2.3 s) with byte-identical output
 #: (aggregation results are partition-count independent).  This is a
-#: STATE-SIZE decision, not a core-count one, so it is a constant with
-#: an env override, never the local core count: at 100 TB these ops'
+#: STATE-SIZE decision, not a core-count one, so it is a constant,
+#: never the local core count: at 100 TB these ops'
 #: state is still a few thousand rows (that is the point of sketches /
 #: per-source rollups), while ops whose state scales with users, corpus
 #: or event rate (sessionization, dedup ledgers, stream-stream join
@@ -124,21 +140,6 @@ BOUNDED_STATE_PARTITIONS = 8
 _CONF_OVERRIDE_LOCK = threading.Lock()
 
 
-def _bounded_state_partitions(default: int) -> int:
-    """Resolve the env override LAZILY at drain time (ADVICE r16: an
-    import-time bare int() made a malformed
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS an ImportError taking every
-    streaming op down, and a post-import env change was ignored).  A
-    bad value degrades to ``default`` instead of raising."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if raw is None:
-        return default
-    try:
-        return max(1, int(raw))
-    except ValueError:
-        return default
-
-
 def join_state_partitions(spark: SparkSession) -> int:
     """State-store partition count for STREAM-STREAM JOIN drains:
     a QUARTER of the session's shuffle parallelism, floor 1 (r17,
@@ -155,16 +156,7 @@ def join_state_partitions(spark: SparkSession) -> int:
     click_attribution 7.97 s @32 -> 4.58 @16 -> 2.75 @8 -> 2.40 @4 ->
     2.66 @2; unattributed 9.92 -> 6.57 -> 3.52 -> 2.86 -> 2.89 — the
     knee is at cores/8..cores/4 and flat below; cores/4 sits on the
-    knee while keeping headroom for fatter watermark windows.
-    Env override:
-    SPARK_GRAFT_STREAM_JOIN_PARTITIONS (parsed lazily, malformed values
-    degrade to the computed default)."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_JOIN_PARTITIONS")
-    if raw is not None:
-        try:
-            return max(1, int(raw))
-        except ValueError:
-            pass
+    knee while keeping headroom for fatter watermark windows."""
     try:
         base = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -287,11 +279,7 @@ def streaming_pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     is codegen'd map-side exactly as in the batch operator."""
     from golang_mapreduce_spark.operators.pii import PII_EMAIL, PII_ID, PII_PHONE, _augmented
 
-    docs = (
-        spark.readStream.schema(docs_stream_schema())
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     t = docs.select("source", _augmented().alias("t"))
     n_email = F.regexp_count(F.col("t"), F.lit(PII_EMAIL))
     n_phone = F.regexp_count(F.col("t"), F.lit(PII_PHONE))
@@ -315,9 +303,7 @@ def streaming_pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("a") / F.count("*"), 6).alias("pii_rate"),
         )
     )
-    return run_stream_to_batch(
-        agg, spark, state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS)
-    )
+    return run_stream_to_batch(agg, spark, state_partitions=BOUNDED_STATE_PARTITIONS)
 
 
 # --- driver-contract queries -------------------------------------------
@@ -330,48 +316,137 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_batch(
         hourly_counts_stream(events),
         spark,
-        state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS),
+        state_partitions=BOUNDED_STATE_PARTITIONS,
     )
 
 
-def _write_sentinel(path: str, ts_sec: int, nanos_layout: bool) -> None:
-    """One far-future watermark-advancing event (user_id = -1) in the
-    events file's physical schema (raw int64 nanos or TIMESTAMP(MICROS),
+#: Event times of the two watermark-advancing sentinels, in seconds:
+#: 2100-01-01 and 2101-01-01 UTC, beyond any fixture timestamp at every
+#: SF.
+SENTINEL_TS = (4_102_444_800, 4_133_980_800)
+
+
+def _write_event_sentinel(
+    path: str, ts_sec: int, nanos_layout: bool, event_types: Sequence[str]
+) -> None:
+    """One far-future watermark-advancing event per entry of
+    ``event_types`` (event_id -1, -2, ...; user_id -1) in the events
+    file's physical schema (raw int64 nanos or TIMESTAMP(MICROS),
     matching the fixture generation being streamed)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    n = len(event_types)
     if nanos_layout:
-        ts_arr = pa.array([ts_sec * 10**9], pa.int64())
+        ts_arr = pa.array([ts_sec * 10**9] * n, pa.int64())
     else:
-        ts_arr = pa.array([ts_sec * 10**6], pa.timestamp("us"))
+        ts_arr = pa.array([ts_sec * 10**6] * n, pa.timestamp("us"))
     table = pa.table(
         {
-            "event_id": pa.array([-1], pa.int64()),
+            "event_id": pa.array([-1 - i for i in range(n)], pa.int64()),
             "ts": ts_arr,
-            "user_id": pa.array([-1], pa.int64()),
-            "event_type": pa.array(["sentinel"], pa.string()),
-            "value": pa.array([0.0], pa.float64()),
-            "props": pa.array(["{}"], pa.string()),
+            "user_id": pa.array([-1] * n, pa.int64()),
+            "event_type": pa.array(list(event_types), pa.string()),
+            "value": pa.array([0.0] * n, pa.float64()),
+            "props": pa.array(["{}"] * n, pa.string()),
         }
     )
     pq.write_table(table, path)
 
 
+def _order_by_name(src: str) -> None:
+    """Give the files in ``src`` mtimes 10 s apart in name order: the
+    file source admits files oldest first, so the names fix which file
+    lands in which micro-batch."""
+    names = sorted(os.listdir(src))
+    t0 = os.path.getmtime(os.path.join(src, names[0]))
+    for i, f in enumerate(names):
+        os.utime(os.path.join(src, f), (t0 + 10 * i, t0 + 10 * i))
+
+
+@contextmanager
+def _staged_source(
+    sf_dir: str,
+    table: str,
+    copies: int,
+    sentinels: Sequence[Callable[[str], None]],
+) -> Iterator[tuple[str, int]]:
+    """A temp file-source directory holding ``copies`` copies of one
+    fixture table followed by one file per ``sentinels`` writer, in
+    that admission order.  Either table layout is flattened: a single
+    ``{table}.parquet`` file, or the ``*.parquet`` parts of a
+    Spark-written directory (scalegen outputs).  Yields ``(dir,
+    n_real)`` with n_real the table's file count; callers size
+    ``maxFilesPerTrigger`` from it so a whole copy lands in one
+    micro-batch (real events split across watermarked batches could
+    legitimately drop as late).  The directory is deleted on exit: a
+    terminated drain never reads its source again, and its memory sink
+    keeps the rows."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(path):
+        parts = [
+            os.path.join(path, f)
+            for f in sorted(os.listdir(path))
+            if f.endswith(".parquet")
+        ]
+    else:
+        parts = [path]
+    src = tempfile.mkdtemp(prefix=f"gmrs_{table}_src_")
+    try:
+        for c in range(copies):
+            for i, part in enumerate(parts):
+                shutil.copy(part, os.path.join(src, f"{c:02d}_{i:05d}_{table}.parquet"))
+        for j, write in enumerate(sentinels):
+            write(os.path.join(src, f"{copies + j:02d}_sentinel.parquet"))
+        _order_by_name(src)
+        yield src, len(parts)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
+@contextmanager
+def _sentinel_events_stream(
+    spark: SparkSession, sf_dir: str, event_types: Sequence[str]
+) -> Iterator[DataFrame]:
+    """Events file stream that drains in two micro-batches: all real
+    files plus sentinel A, then sentinel B (:data:`SENTINEL_TS`).  The
+    watermark is computed at the END of a batch, so batch 1 leaves it
+    far-future and batch 2 fires every timeout and emits every
+    append-mode row of the real events against it.  Two batches is the
+    floor: timeouts and emission always run against the PREVIOUS
+    batch's watermark.  Each sentinel file holds one row per
+    ``event_types`` entry, user_id -1, for callers to filter after the
+    drain."""
+    ts_type = events_ts_layout(spark, f"{sf_dir}/events.parquet")
+    sentinels = [
+        partial(
+            _write_event_sentinel,
+            ts_sec=ts,
+            nanos_layout=isinstance(ts_type, T.LongType),
+            event_types=event_types,
+        )
+        for ts in SENTINEL_TS
+    ]
+    with _staged_source(sf_dir, "events", 1, sentinels) as (src, n_real):
+        yield normalize_events_ts(
+            spark.readStream.schema(events_stream_schema(ts_type))
+            .option("maxFilesPerTrigger", n_real + 1)
+            .parquet(src)
+        )
+
+
 def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom arbitrary-state sessionization (applyInPandasWithState),
-    fully DRAINED: the events file is followed by two far-future sentinel
+    fully DRAINED: the events are followed by two far-future sentinel
     files, so the event-time watermark advances past every real
     session's last-event + gap and the state machine's timeouts flush
     ALL sessions — closed output therefore equals the batch
     gaps-and-islands oracle exactly (hash-checkable), not just the
     sessions closed by a subsequent event.
 
-    Drain shape: maxFilesPerTrigger=2 packs [events, sentinel A] into
-    micro-batch 1 — the watermark is computed at END of batch, so batch
-    2 (sentinel B) fires every timeout against an already-far-future
-    watermark.  Two batches is the floor: timeouts always run against
-    the PREVIOUS batch's watermark.  (Measured at sf0.1: 2 batches at
+    Drain shape: micro-batch 1 is all real files plus sentinel A, batch
+    2 is sentinel B, which fires every timeout
+    (:func:`_sentinel_events_stream`).  (Measured at sf0.1: 2 batches at
     session-default partitions ≈ 8 s vs 3 batches ≈ 13 s; do NOT shrink
     shuffle partitions here — ~100k sessions flush through the Python
     state workers, so state-store partition count is the parallelism,
@@ -380,33 +455,10 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-batch state survival is additionally asserted in
     tests/test_stateful_streaming.py with the real events split across
     three micro-batches."""
-    import os
-
     from golang_mapreduce_spark.streaming.stateful import sessionize_with_state
 
-    src = tempfile.mkdtemp(prefix="gmrs_drain_src_")
-    try:
-        real = os.path.join(src, "00_events.parquet")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), real)
-        ts_type = events_ts_layout(spark, real)
-        nanos = isinstance(ts_type, T.LongType)
-        # far future (2100/2101): beyond any fixture timestamp at every SF
-        _write_sentinel(os.path.join(src, "01_sentinel.parquet"), 4_102_444_800, nanos)
-        _write_sentinel(os.path.join(src, "02_sentinel.parquet"), 4_133_980_800, nanos)
-        now = os.path.getmtime(real)
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (now + 10 * i, now + 10 * i))
-
-        stream = normalize_events_ts(
-            spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
+    with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
         out = drain_available_now(sessionize_with_state(stream), spark)
-    finally:
-        # the drained memory sink keeps the rows; the source copy is
-        # dead weight after termination (leaked per call, ADVICE r2)
-        shutil.rmtree(src, ignore_errors=True)
     return out.where(F.col("user_id") >= 0)
 
 
@@ -505,8 +557,8 @@ JOIN events c
 
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once dedup over an at-least-once source, drained:
-    the source directory holds the events file TWICE (duplicate delivery,
-    the failure mode S3-retry ingestion actually produces), read one file
+    the source directory holds the events TWICE (duplicate delivery,
+    the failure mode S3-retry ingestion actually produces), read one copy
     per micro-batch so the dedup state must survive a batch boundary.
     ``withWatermark + dropDuplicates`` on (event_id, ts) keeps the first
     copy and bounds state: keys older than the watermark are evicted, and
@@ -522,24 +574,14 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming pipeline (reference analog: the at-least-once task retry +
     idempotent rename in worker.go:156,223 — same contract, record
     granularity instead of task granularity)."""
-    import os
-
-    src = tempfile.mkdtemp(prefix="gmrs_dup_src_")
-    try:
-        for i in (0, 1):
-            shutil.copy(
-                os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, f"0{i}_events.parquet"),
-            )
-        ts_type = events_ts_layout(spark, os.path.join(src, "00_events.parquet"))
+    ts_type = events_ts_layout(spark, f"{sf_dir}/events.parquet")
+    with _staged_source(sf_dir, "events", 2, ()) as (src, n_real):
         stream = normalize_events_ts(
             spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", 1)
+            .option("maxFilesPerTrigger", n_real)
             .parquet(src)
         ).withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
         out = drain_available_now(stream, spark)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return (
         out.groupBy("event_type")
         .agg(
@@ -584,8 +626,6 @@ def streaming_packed_sequences(
     driver-materialization residue).  The drained output is split-
     invariant: _pack_fn's recurrence depends only on global doc_id order,
     which increasing-range files consumed in mtime order preserve."""
-    import os
-
     from golang_mapreduce_spark.functions.text import ws_words
     from golang_mapreduce_spark.sources.fixtures import load_table
     from golang_mapreduce_spark.streaming.stateful import pack_with_state
@@ -623,9 +663,7 @@ def streaming_packed_sequences(
                 os.path.join(stage, pf), os.path.join(src, f"{i:02d}_sizes.parquet")
             )
             shutil.rmtree(stage, ignore_errors=True)
-        t0 = os.path.getmtime(os.path.join(src, "00_sizes.parquet"))
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (t0 + 10 * i, t0 + 10 * i))
+        _order_by_name(src)
         stream = (
             spark.readStream.schema("doc_id bigint, lang string, n_toks bigint")
             .option("maxFilesPerTrigger", 1)
@@ -852,11 +890,8 @@ def _streaming_triage_frame(
     base_hash, base_bands, base_sig_p = _triage_base_relations(
         spark, sf_dir, base_dir
     )
-    stream = (
-        spark.readStream.schema(docs_stream_schema())
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .where(F.col("doc_id") % INGEST_MOD == INGEST_RES)
+    stream = table_stream(spark, sf_dir, "documents", docs_stream_schema()).where(
+        F.col("doc_id") % INGEST_MOD == INGEST_RES
     )
     rows = _triage_probe_rows(stream, base_hash, base_bands, base_sig_p)
     return _triage_verdict(
@@ -953,28 +988,17 @@ def streaming_triage_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: swap the file source for Kafka and the synthetic ts for the
     ingest timestamp; state per trigger is one row per in-flight-window
     doc, evicted on watermark passage."""
-    import os
-
-    src = tempfile.mkdtemp(prefix="gmrs_triage_src_")
-    try:
-        real = os.path.join(src, "00_documents.parquet")
-        shutil.copy(os.path.join(sf_dir, "documents.parquet"), real)
-        for i, sid in enumerate(_TRIAGE_SENTINELS):
-            _write_doc_sentinel(os.path.join(src, f"{i + 1:02d}_sentinel.parquet"), sid)
-        now = os.path.getmtime(real)
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (now + 10 * i, now + 10 * i))
-
-        # [docs, sentinel A] in micro-batch 1: the watermark computed at
-        # its end is already far-future, so batch 2 (sentinel B) emits
-        # every real window — 2 batches, the stateful_sessionize floor.
+    sentinels = [partial(_write_doc_sentinel, doc_id=d) for d in _TRIAGE_SENTINELS]
+    with _staged_source(sf_dir, "documents", 1, sentinels) as (src, n_real):
+        # [all real docs, sentinel A] in micro-batch 1: the watermark
+        # computed at its end is already far-future, so batch 2
+        # (sentinel B) emits every real window — 2 batches, the
+        # stateful_sessionize floor.
         out = run_stream_to_batch(
-            _append_triage_frame(spark, sf_dir, src, max_files=2),
+            _append_triage_frame(spark, sf_dir, src, max_files=n_real + 1),
             spark,
             output_mode="append",
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return out.where(F.col("doc_id") < min(_TRIAGE_SENTINELS))
 
 
@@ -995,25 +1019,7 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-data contract matches streaming_triage_append's measured
     semantics (drop past the two-batch-lagged watermark, counted in
     numRowsDroppedByWatermark)."""
-    import os
-
-    src = tempfile.mkdtemp(prefix="gmrs_tumb_src_")
-    try:
-        real = os.path.join(src, "00_events.parquet")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), real)
-        ts_type = events_ts_layout(spark, real)
-        nanos = isinstance(ts_type, T.LongType)
-        _write_sentinel(os.path.join(src, "01_sentinel.parquet"), 4_102_444_800, nanos)
-        _write_sentinel(os.path.join(src, "02_sentinel.parquet"), 4_133_980_800, nanos)
-        now = os.path.getmtime(real)
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (now + 10 * i, now + 10 * i))
-
-        stream = normalize_events_ts(
-            spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
+    with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
         # append mode must group by the FULL window struct: projecting
         # .start inside the groupBy detaches the grouping column from
         # the watermarked event-time column and Spark rejects the plan
@@ -1030,10 +1036,8 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg,
             spark,
             output_mode="append",
-            state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS),
+            state_partitions=BOUNDED_STATE_PARTITIONS,
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return out.where(F.col("event_type") != "sentinel").select(
         F.col("w.start").alias("wstart"), "event_type", "n", "sum_value"
     )
@@ -1050,31 +1054,13 @@ def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window when gap semantics suffice (no Python in the loop —
     the whole pipeline stays JVM-side codegen).
 
-    Drain: the sessionize sentinel pattern (two far-future events,
-    maxFilesPerTrigger=2) finalizes every real session, so the emitted
-    log equals the batch session_windows_30m oracle exactly; sentinel
-    rows (user_id < 0) are filtered after the drain.  State is one row
-    per OPEN session, evicted on emission — O(active users), never
-    O(history)."""
-    import os
-
-    src = tempfile.mkdtemp(prefix="gmrs_sess_src_")
-    try:
-        real = os.path.join(src, "00_events.parquet")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), real)
-        ts_type = events_ts_layout(spark, real)
-        nanos = isinstance(ts_type, T.LongType)
-        _write_sentinel(os.path.join(src, "01_sentinel.parquet"), 4_102_444_800, nanos)
-        _write_sentinel(os.path.join(src, "02_sentinel.parquet"), 4_133_980_800, nanos)
-        now = os.path.getmtime(real)
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (now + 10 * i, now + 10 * i))
-
-        stream = normalize_events_ts(
-            spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
+    Drain: the sessionize sentinel pattern (two far-future events;
+    micro-batch 1 is all real files plus sentinel A) finalizes every
+    real session, so the emitted log equals the batch
+    session_windows_30m oracle exactly; sentinel rows (user_id < 0) are
+    filtered after the drain.  State is one row per OPEN session,
+    evicted on emission — O(active users), never O(history)."""
+    with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
         agg = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -1084,8 +1070,6 @@ def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = run_stream_to_batch(agg, spark, output_mode="append")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return out.where(F.col("user_id") >= 0).select(
         "user_id",
         F.col("session_window.start").alias("session_start"),
@@ -1108,31 +1092,13 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never streaming state, which would need complete mode's unbounded
     retention).
 
-    Drain: the sessionize sentinel pattern (two far-future events,
-    maxFilesPerTrigger=2); sentinel rows carry props '{{}}' so their
-    item parses NULL and the pre-aggregation filter drops them.  State
-    is one row per open (window, item) — O(open windows × item vocab),
-    evicted on watermark passage; swap the file source for Kafka and
-    nothing downstream changes."""
-    import os
-
-    src = tempfile.mkdtemp(prefix="gmrs_trend_src_")
-    try:
-        real = os.path.join(src, "00_events.parquet")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), real)
-        ts_type = events_ts_layout(spark, real)
-        nanos = isinstance(ts_type, T.LongType)
-        _write_sentinel(os.path.join(src, "01_sentinel.parquet"), 4_102_444_800, nanos)
-        _write_sentinel(os.path.join(src, "02_sentinel.parquet"), 4_133_980_800, nanos)
-        now = os.path.getmtime(real)
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (now + 10 * i, now + 10 * i))
-
-        stream = normalize_events_ts(
-            spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
+    Drain: the sessionize sentinel pattern (two far-future events;
+    micro-batch 1 is all real files plus sentinel A); sentinel rows
+    carry props '{{}}' so their item parses NULL and the post-drain
+    filter drops them.  State is one row per open (window, item) —
+    O(open windows × item vocab), evicted on watermark passage; swap
+    the file source for Kafka and nothing downstream changes."""
+    with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
         # NO pre-aggregation row filter: Catalyst pushes filters through
         # the EventTimeWatermark node, so a click-only filter would drop
         # the sentinel rows BEFORE they advance the watermark and the
@@ -1154,10 +1120,8 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg,
             spark,
             output_mode="append",
-            state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS),
+            state_partitions=BOUNDED_STATE_PARTITIONS,
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     log = log.where(F.col("item").isNotNull())
     from pyspark.sql.window import Window
 
@@ -1201,33 +1165,6 @@ WHERE rank <= {TRENDING_TOP}
 """
 
 
-def _write_typed_sentinels(path: str, ts_sec: int, nanos_layout: bool) -> None:
-    """Watermark-advancing sentinel pair — one far-future 'click' and
-    one far-future 'purchase' (user_id = -1) — for jobs whose two
-    stream legs FILTER on event_type before their withWatermark: a
-    type='sentinel' row would be filtered out before ever reaching
-    either leg's watermark tracker, so each leg gets a sentinel of its
-    own type."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if nanos_layout:
-        ts_arr = pa.array([ts_sec * 10**9] * 2, pa.int64())
-    else:
-        ts_arr = pa.array([ts_sec * 10**6] * 2, pa.timestamp("us"))
-    table = pa.table(
-        {
-            "event_id": pa.array([-1, -2], pa.int64()),
-            "ts": ts_arr,
-            "user_id": pa.array([-1, -1], pa.int64()),
-            "event_type": pa.array(["click", "purchase"], pa.string()),
-            "value": pa.array([0.0, 0.0], pa.float64()),
-            "props": pa.array(["{}", "{}"], pa.string()),
-        }
-    )
-    pq.write_table(table, path)
-
-
 def streaming_unattributed_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream join with watermarks: purchases that had
     NO click from the same user in the preceding 10 minutes — the
@@ -1240,55 +1177,18 @@ def streaming_unattributed_purchases(spark: SparkSession, sf_dir: str) -> DataFr
     result equals the batch NOT EXISTS anti-join (the oracle).
 
     Drain: the sentinel pattern, but with TYPED sentinels — both join
-    legs filter on event_type before their watermark, so each leg needs
-    a far-future row of its own type to advance its tracker (see
-    _write_typed_sentinels); two sentinel batches let the batch-end
-    watermark finalize every real purchase.  Sentinel rows (user_id<0)
+    legs filter on event_type before their watermark, and a
+    type='sentinel' row would be filtered out before reaching either
+    leg's watermark tracker, so each sentinel file holds one far-future
+    'click' and one far-future 'purchase'; two sentinel batches let the
+    batch-end watermark finalize every real purchase.  Sentinel rows (user_id<0)
     are filtered after the drain.
 
     Scale: state is bounded by the watermark windows on both sides
     (each leg buffers at most 30 minutes of events), keyed and shuffled
     on user_id exactly like the inner join; Kafka's live watermark
     replaces the sentinel artifact with nothing else changing."""
-    import os
-
-    src = tempfile.mkdtemp(prefix="gmrs_unattr_src_")
-    try:
-        # the fixture's events.parquet is a single file at testdata SFs
-        # but a Spark-written DIRECTORY of part files for scalegen
-        # outputs; flatten either layout into src so micro-batch 1 is
-        # [all real events, sentinel A] and batch 2 is [sentinel B] —
-        # the two-batch drain semantics the oracle equality needs (real
-        # events split across watermarked batches could legitimately
-        # drop late rows).
-        ev = os.path.join(sf_dir, "events.parquet")
-        if os.path.isdir(ev):
-            parts = sorted(
-                f for f in os.listdir(ev) if f.endswith(".parquet")
-            )
-            for i, p in enumerate(parts):
-                shutil.copy(
-                    os.path.join(ev, p),
-                    os.path.join(src, f"00_{i:05d}_events.parquet"),
-                )
-            n_real = len(parts)
-        else:
-            shutil.copy(ev, os.path.join(src, "00_00000_events.parquet"))
-            n_real = 1
-        real = os.path.join(src, "00_00000_events.parquet")
-        ts_type = events_ts_layout(spark, real)
-        nanos = isinstance(ts_type, T.LongType)
-        _write_typed_sentinels(os.path.join(src, "01_sentinel.parquet"), 4_102_444_800, nanos)
-        _write_typed_sentinels(os.path.join(src, "02_sentinel.parquet"), 4_133_980_800, nanos)
-        now = os.path.getmtime(real)
-        for i, f in enumerate(sorted(os.listdir(src))):
-            os.utime(os.path.join(src, f), (now + 10 * i, now + 10 * i))
-
-        base = normalize_events_ts(
-            spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", n_real + 1)
-            .parquet(src)
-        )
+    with _sentinel_events_stream(spark, sf_dir, ("click", "purchase")) as base:
         clicks = (
             base.where(F.col("event_type") == "click")
             .select(
@@ -1325,8 +1225,6 @@ def streaming_unattributed_purchases(spark: SparkSession, sf_dir: str) -> DataFr
             output_mode="append",
             state_partitions=join_state_partitions(spark),
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return (
         out.where(F.col("click_id").isNull() & (F.col("user_id") >= 0))
         .select("user_id", "purchase_id", "purchase_ts")
@@ -1362,11 +1260,7 @@ def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes."""
     from golang_mapreduce_spark.operators.textstats import quality_features
 
-    docs = (
-        spark.readStream.schema(docs_stream_schema())
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     q = quality_features(docs, keep=("source",))
     agg = q.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1377,9 +1271,7 @@ def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("quality_score").alias("min_quality"),
         F.max("quality_score").alias("max_quality"),
     )
-    return run_stream_to_batch(
-        agg, spark, state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS)
-    )
+    return run_stream_to_batch(agg, spark, state_partitions=BOUNDED_STATE_PARTITIONS)
 
 
 def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1401,11 +1293,7 @@ def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from golang_mapreduce_spark.functions.text import ws_words
     from golang_mapreduce_spark.operators.textstats import CMS_ROWS, CMS_WIDTH
 
-    docs = (
-        spark.readStream.schema(docs_stream_schema())
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     toks = docs.select(F.explode(ws_words("text")).alias("tok"))
     buckets = toks.select(
         F.posexplode(
@@ -1421,9 +1309,7 @@ def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = buckets.groupBy("row_i", "bucket").agg(
         F.count("*").cast("bigint").alias("cell_n")
     )
-    return run_stream_to_batch(
-        cells, spark, state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS)
-    )
+    return run_stream_to_batch(cells, spark, state_partitions=BOUNDED_STATE_PARTITIONS)
 
 
 def _streaming_cms_oracle() -> str:
@@ -1472,11 +1358,7 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         HLL_RANK_CAP,
     )
 
-    docs = (
-        spark.readStream.schema(docs_stream_schema())
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     toks = docs.select("source", F.explode(ws_words("text")).alias("tok"))
     h = hash32("tok")
     w = (h / F.lit(HLL_BUCKETS)).cast("bigint")
@@ -1492,9 +1374,7 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "bucket")
         .agg(F.max("rank").cast("int").alias("m"))
     )
-    return run_stream_to_batch(
-        reg, spark, state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS)
-    )
+    return run_stream_to_batch(reg, spark, state_partitions=BOUNDED_STATE_PARTITIONS)
 
 
 def _streaming_hll_oracle() -> str:

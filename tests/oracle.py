@@ -8,6 +8,7 @@ driver even when stringified values agree), and order-insensitive values
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pyarrow as pa
@@ -16,11 +17,14 @@ from golang_mapreduce_spark.sources.fixtures import TABLES
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB views over the fixture tables; a table that is a
+    Spark-written directory (scalegen outputs) reads its parquet parts."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
 
 

@@ -26,11 +26,7 @@ def test_bounded_state_drain_restores_conf_and_result(spark, sf_dir):
     # same drain with the session-default state partitioning: the
     # result must be identical (partition count is invisible to the
     # aggregation) — run via the raw helper with state_partitions=None
-    docs = (
-        spark.readStream.schema(sj.docs_stream_schema())
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    docs = sj.table_stream(spark, sf_dir, "documents", sj.docs_stream_schema())
     from golang_mapreduce_spark.functions.hashing import hash32
     from golang_mapreduce_spark.functions.text import ws_words
     from golang_mapreduce_spark.operators.textstats import CMS_ROWS, CMS_WIDTH

@@ -1,10 +1,8 @@
 """Round-17 optimization pins.
 
-Covers the harness/robustness fixes that round 17 ships alongside the
-operator work: the lazy SPARK_GRAFT_STREAM_STATE_PARTITIONS parse
-(ADVICE r16: a malformed value used to be an import-time crash taking
-every streaming op down) and the conf-override lock around bounded-
-state drains.
+Covers the state-partition sizing of the streaming drains: the bounded-
+state constant, the cores/4 join rule, and the conf-override lock around
+bounded-state drains.
 """
 
 from __future__ import annotations
@@ -14,47 +12,26 @@ import inspect
 from golang_mapreduce_spark.streaming import jobs
 
 
-def test_state_partitions_env_parsed_lazily_and_safely(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    assert jobs._bounded_state_partitions(8) == 8
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "16")
-    assert jobs._bounded_state_partitions(8) == 16, (
-        "env override set after import must take effect (lazy read)"
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "not-a-number")
-    assert jobs._bounded_state_partitions(8) == 8, (
-        "malformed override must degrade to the default, not raise"
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "0")
-    assert jobs._bounded_state_partitions(8) == 1, "clamped to >= 1"
-
-
 def test_no_import_time_env_int_parse():
-    """The module constant must stay a plain literal; the env is
-    resolved lazily at each bounded drain's call site (NOT inside
-    run_stream_to_batch, which also serves the join drains whose
-    partitions come from join_state_partitions and must not be
-    overridden by the bounded-state env)."""
+    """The module constant is a plain literal that no environment
+    variable overrides, passed at each bounded drain's call site (NOT
+    inside run_stream_to_batch, which also serves the join drains whose
+    partitions come from join_state_partitions)."""
     src = inspect.getsource(jobs)
-    head = src.split("def _bounded_state_partitions")[0]
-    assert "int(\n    os.environ" not in head
+    assert "os.environ" not in src
     assert jobs.BOUNDED_STATE_PARTITIONS == 8
-    drain_src = inspect.getsource(jobs.run_stream_to_batch)
-    assert "_bounded_state_partitions(" not in drain_src
+    drain = inspect.signature(jobs.run_stream_to_batch)
+    assert drain.parameters["state_partitions"].default is None
     assert src.count(
-        "state_partitions=_bounded_state_partitions(BOUNDED_STATE_PARTITIONS)"
-    ) == 7, "every bounded drain resolves the env lazily at call time"
+        "state_partitions=BOUNDED_STATE_PARTITIONS"
+    ) == 7, "every bounded drain passes the constant at its call site"
 
 
-def test_join_state_partitions_is_fraction_of_session(monkeypatch):
+def test_join_state_partitions_is_fraction_of_session():
     """r17: stream-stream join drains size their state stores to a
     QUARTER of the session parallelism (state is O(watermark window) —
     it must scale with the cluster, so a fraction, never a constant;
-    the measured knee, see join_state_partitions' docstring), with a
-    lazily-parsed env override that degrades on malformed values."""
+    the measured knee, see join_state_partitions' docstring)."""
 
     class _Conf:
         def __init__(self, v):
@@ -67,15 +44,9 @@ def test_join_state_partitions_is_fraction_of_session(monkeypatch):
         def __init__(self, v):
             self.conf = _Conf(v)
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", raising=False)
     assert jobs.join_state_partitions(_Spark("32")) == 8
     assert jobs.join_state_partitions(_Spark("8")) == 2
     assert jobs.join_state_partitions(_Spark("1")) == 1, "floor 1"
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", "12")
-    assert jobs.join_state_partitions(_Spark("32")) == 12
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", "junk")
-    assert jobs.join_state_partitions(_Spark("32")) == 8
 
 
 def test_bounded_drain_conf_window_is_locked():
@@ -88,7 +59,7 @@ def test_bounded_drain_conf_window_is_locked():
     assert isinstance(jobs._CONF_OVERRIDE_LOCK, type(threading.Lock()))
 
 
-def test_join_drain_state_partitions_result_identical(spark, sf_dir, monkeypatch):
+def test_join_drain_state_partitions_result_identical(spark, sf_dir):
     """r17: the stream-stream join drains run their state stores at
     join_state_partitions (cores/4) — the drained result must be
     byte-identical to the same drain at the session default (state
@@ -100,13 +71,15 @@ def test_join_drain_state_partitions_result_identical(spark, sf_dir, monkeypatch
     rows_sized = sorted(map(tuple, out.collect()))
     assert spark.conf.get(key) == before, "drain leaked its conf override"
 
-    # same op forced to the session default via the env override
-    monkeypatch.setenv(
-        "SPARK_GRAFT_STREAM_JOIN_PARTITIONS", str(before)
-    )
-    rows_default = sorted(
-        map(tuple, jobs.streaming_click_attribution(spark, sf_dir).collect())
-    )
+    # same op forced to the session default: at 4x the shuffle
+    # partitions, join_state_partitions (a quarter) equals `before`
+    spark.conf.set(key, str(4 * int(before)))
+    try:
+        rows_default = sorted(
+            map(tuple, jobs.streaming_click_attribution(spark, sf_dir).collect())
+        )
+    finally:
+        spark.conf.set(key, before)
     assert rows_sized == rows_default
     assert len(rows_sized) > 0
     assert spark.conf.get(key) == before
