@@ -86,11 +86,10 @@ _AUG_SQL = (
 )
 
 
-def pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source PII audit: doc counts, per-pattern hit totals, and the
-    share of docs carrying ANY hit — the table a corpus owner reads to
-    decide which sources need redaction before packing."""
-    docs = load_table(spark, sf_dir, "documents")
+def pii_source_rates(docs: DataFrame) -> DataFrame:
+    """Per-source PII counts and rates over a batch or streaming
+    ``docs`` frame (doc_id, text, source): a stateless regex map, then
+    one aggregate keyed on ``source``."""
     t = docs.select("source", _augmented().alias("t"))
     n_email = F.regexp_count(F.col("t"), F.lit(PII_EMAIL))
     n_phone = F.regexp_count(F.col("t"), F.lit(PII_PHONE))
@@ -112,6 +111,13 @@ def pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("a") / F.count("*"), 6).alias("pii_rate"),
         )
     )
+
+
+def pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source PII audit: doc counts, per-pattern hit totals, and the
+    share of docs carrying ANY hit — the table a corpus owner reads to
+    decide which sources need redaction before packing."""
+    return pii_source_rates(load_table(spark, sf_dir, "documents"))
 
 
 PII_RATES_SQL = f"""

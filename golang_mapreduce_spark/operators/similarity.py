@@ -404,20 +404,21 @@ def ann_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
+    # prn is the walk's (csim DESC, cid ASC) rank, so ordering the
+    # running mass by it walks the clusters in the same order
     pw = (
         Window.partitionBy("query_id")
-        .orderBy(F.desc("csim"), F.asc("cid"))
+        .orderBy("prn")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     probes = (
-        q.join(cent)
-        .select("query_id", "q_emb", "cid", _cos("q_emb", "c_emb").alias("csim"))
+        _probe_walk(q, cent)
         .join(sizes, F.col("cid") == F.col("cluster"), "left")
         .select(
             "query_id",
             "q_emb",
             "cid",
-            "csim",
+            "prn",
             F.coalesce(F.col("csize"), F.lit(0)).alias("csz"),
         )
         .withColumn("mass_before", F.coalesce(F.sum("csz").over(pw), F.lit(0)))

@@ -2249,6 +2249,19 @@ CMS_WIDTH = 1024   # buckets per row
 CMS_TOPK = 20      # heavy hitters reported
 
 
+def cms_bucket_ids() -> F.Column:
+    """The CMS_ROWS bucket ids of column ``tok``, one per hash row, as an
+    int array: row i hashes ``tok || '#cms<i>'`` into CMS_WIDTH buckets.
+    The batch sketch and the streaming cells both posexplode it into
+    (row_i, bucket)."""
+    return F.array(
+        *[
+            (hash32(F.concat(F.col("tok"), F.lit(f"#cms{i}"))) % CMS_WIDTH).cast("int")
+            for i in range(CMS_ROWS)
+        ]
+    )
+
+
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min-Sketch (Cormode & Muthukrishnan 2005) frequency
     estimation, audited against truth: the
@@ -2273,24 +2286,14 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").alias("exact_n"))
     )
-
-    def bucket_cols():
-        return F.array(
-            *[
-                (hash32(F.concat(F.col("tok"), F.lit(f"#cms{i}")))
-                 % CMS_WIDTH).cast("int")
-                for i in range(CMS_ROWS)
-            ]
-        )
-
     cells = (
-        exact.select("exact_n", F.posexplode(bucket_cols()).alias("row_i", "bucket"))
+        exact.select("exact_n", F.posexplode(cms_bucket_ids()).alias("row_i", "bucket"))
         .groupBy("row_i", "bucket")
         .agg(F.sum("exact_n").alias("cell_n"))
     )
     top = exact.orderBy(F.desc("exact_n"), F.asc("tok")).limit(CMS_TOPK)
     probes = top.select(
-        "tok", "exact_n", F.posexplode(bucket_cols()).alias("row_i", "bucket")
+        "tok", "exact_n", F.posexplode(cms_bucket_ids()).alias("row_i", "bucket")
     )
     return (
         probes.join(cells, ["row_i", "bucket"])
@@ -2459,6 +2462,24 @@ HLL_RANK_CAP = 25          # 24 payload bits + 1
 HLL_EST_NUM = 47072.71267120224
 
 
+def hll_registers(toks: DataFrame) -> DataFrame:
+    """The HLL register relation (source, bucket, m) of a batch or
+    streaming (source, tok) frame: per hash bucket, the MAX leading-zero
+    rank of the top 24 hash bits, capped at HLL_RANK_CAP for all-zero
+    bits."""
+    h = hash32("tok")
+    w = (h / F.lit(HLL_BUCKETS)).cast("bigint")  # top 24 bits
+    rank = F.when(w == 0, F.lit(HLL_RANK_CAP)).otherwise(
+        F.lit(HLL_RANK_CAP) - F.length(F.conv(w.cast("string"), 10, 2))
+    )
+    return (
+        toks.select("source", (h % HLL_BUCKETS).cast("int").alias("bucket"),
+                    rank.alias("rank"))
+        .groupBy("source", "bucket")
+        .agg(F.max("rank").alias("m"))
+    )
+
+
 def hll_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-token estimates per source, audited against
     the exact count — the OTHER canonical mergeable sketch next to
@@ -2478,18 +2499,7 @@ def hll_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     wouldn't scale, which is the point the rel_error column makes."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("source", F.explode(ws_words("text")).alias("tok"))
-    h = hash32("tok")
-    w = (h / F.lit(HLL_BUCKETS)).cast("bigint")  # top 24 bits
-    rank = F.when(w == 0, F.lit(HLL_RANK_CAP)).otherwise(
-        F.lit(HLL_RANK_CAP) - F.length(F.conv(w.cast("string"), 10, 2))
-    )
-    reg = (
-        toks.select("source", (h % HLL_BUCKETS).cast("int").alias("bucket"),
-                    rank.alias("rank"))
-        .groupBy("source", "bucket")
-        .agg(F.max("rank").alias("m"))
-    )
-    sums = reg.groupBy("source").agg(
+    sums = hll_registers(toks).groupBy("source").agg(
         (
             F.sum(F.pow(F.lit(2.0), -F.col("m")))
             + (F.lit(HLL_BUCKETS) - F.count("*"))  # empty registers: 2^0

@@ -2,11 +2,13 @@
 and session windows (absent in the reference; its paradigm would need one
 MR round per window assignment, SURVEY.md §2.4).
 
-Batch-first so every window query is DuckDB-oracle-checkable; the same
-aggregations run incrementally in golang_mapreduce_spark.streaming with
-watermarks.  All window starts are epoch-aligned in UTC (session timezone
-pinned by the session factory), matching the oracle's explicit
-floor(epoch/step) arithmetic.
+Batch-first so every window query is DuckDB-oracle-checkable.  The
+hourly and session aggregations are the kernels :func:`hourly_counts` and
+:func:`session_counts`: the batch queries call them on ``load_table``,
+and the drains in golang_mapreduce_spark.streaming call them on the event
+stream (complete mode, or append mode behind a watermark).  All window
+starts are epoch-aligned in UTC (session timezone pinned by the session
+factory), matching the oracle's explicit floor(epoch/step) arithmetic.
 
 Scale: groupBy(window) shuffles on (window, key) — at 100 TB the
 partition count is (time-range/step × keys), naturally parallel; skewed
@@ -24,19 +26,25 @@ from golang_mapreduce_spark.operators.relational import _dec
 from golang_mapreduce_spark.sources.fixtures import load_table
 
 
-def tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows × event_type."""
-    e = load_table(spark, sf_dir, "events")
+def hourly_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling windows × event_type over a batch or streaming
+    ``events`` frame.  It groups on the full window struct and projects
+    its start after the aggregate: an append-mode stream must group on
+    the struct, because a projected start is detached from the
+    watermarked event-time column and Spark rejects the plan."""
     return (
-        e.groupBy(
-            F.window("ts", "1 hour").start.alias("wstart"),
-            "event_type",
-        )
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.expr(f"CAST(SUM({_dec('value')}) AS DOUBLE)").alias("sum_value"),
         )
+        .select(F.col("w.start").alias("wstart"), "event_type", "n", "sum_value")
     )
+
+
+def tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour tumbling windows × event_type."""
+    return hourly_counts(load_table(spark, sf_dir, "events"))
 
 
 TUMBLING_SQL = f"""
@@ -75,14 +83,11 @@ GROUP BY 1
 """
 
 
-def session_windows_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows with a 30-minute inactivity gap.  Spark's
-    session_window merges adjacent events whose gap < 30 min; the oracle
-    is the classic gaps-and-islands formulation (lag + running flag sum),
-    which is provably the same partition of each user's timeline."""
-    e = load_table(spark, sf_dir, "events")
+def session_counts(events: DataFrame) -> DataFrame:
+    """Per-user session windows with a 30-minute inactivity gap over a
+    batch or streaming ``events`` frame."""
     return (
-        e.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.expr(f"CAST(SUM({_dec('value')}) AS DOUBLE)").alias("sum_value"),
@@ -96,9 +101,17 @@ def session_windows_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def session_windows_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user session windows with a 30-minute inactivity gap.  Spark's
+    session_window merges adjacent events whose gap < 30 min; the oracle
+    is the classic gaps-and-islands formulation (lag + running flag sum),
+    which is provably the same partition of each user's timeline."""
+    return session_counts(load_table(spark, sf_dir, "events"))
+
+
 SESSION_SQL = f"""
 WITH flagged AS (
-  SELECT user_id, ts, value,
+  SELECT user_id, ts, event_id, value,
          -- strict > : Spark's session_window MERGES an event arriving
          -- exactly `gap` after its predecessor (adjacent sessions are
          -- inclusive-merged; verified empirically, pinned in
@@ -110,7 +123,9 @@ WITH flagged AS (
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), numbered AS (
   SELECT user_id, ts, value,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+         -- same (ts, event_id) order as the flags: a user's events
+         -- with equal ts would otherwise sum in arbitrary order
+         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                 ROWS UNBOUNDED PRECEDING) AS session_id
   FROM flagged
 )

@@ -1,10 +1,16 @@
-"""Structured Streaming layer — incremental versions of the window
+"""Structured Streaming layer — incremental versions of the batch
 operators.
 
 The reference has no streaming at all (one M→R round per job, SURVEY.md
 §2.4); Spark supplies incremental execution, state stores, and exactly-once
-sinks.  The jobs here read the events fixture as a *file stream* so the
-exact same aggregation logic runs incrementally; watermarks bound state.
+sinks.  The jobs here read the fixtures as a *file stream* and run the
+batch operator's own transformation on it, so the drained table equals
+the batch query: ``windows.hourly_counts`` and ``windows.session_counts``
+(the window drains), ``pii.pii_source_rates``,
+``textstats.quality_features``, ``textstats.cms_bucket_ids`` and
+``textstats.hll_registers`` (the document drains), and
+:func:`_purchase_click_join` (both stream-stream joins).  Watermarks bound
+state.
 
 Design at scale: the file source is a stand-in for Kafka — swap
 ``readStream.parquet`` for ``readStream.format("kafka")`` and everything
@@ -28,9 +34,42 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from golang_mapreduce_spark.operators.relational import _dec
+from golang_mapreduce_spark.functions.hashing import sql_hash32
+from golang_mapreduce_spark.functions.text import ws_words
+from golang_mapreduce_spark.operators.corpus import PACKED_SEQUENCES_SQL
+from golang_mapreduce_spark.operators.dedup import (
+    BAND_STRUCT_EXPR,
+    INCREMENTAL_TRIAGE_SQL,
+    INGEST_MOD,
+    INGEST_RES,
+    MINHASH_EST_THRESHOLD,
+    NUM_HASHES,
+    _bands_from,
+    _shingles,
+    _signatures_from,
+    minhash_pairs_sql,
+    rowwise_hashes,
+    rowwise_signature,
+)
+from golang_mapreduce_spark.operators.pii import PII_RATES_SQL, pii_source_rates
+from golang_mapreduce_spark.operators.textstats import (
+    CMS_ROWS,
+    CMS_WIDTH,
+    HLL_BUCKETS,
+    HLL_RANK_CAP,
+    QUALITY_SQL,
+    cms_bucket_ids,
+    hll_registers,
+    quality_features,
+)
+from golang_mapreduce_spark.operators.windows import (
+    SESSION_SQL,
+    TUMBLING_SQL,
+    hourly_counts,
+    session_counts,
+)
 from golang_mapreduce_spark.session import ensure_session_invariants
-from golang_mapreduce_spark.sources.fixtures import normalize_events_ts
+from golang_mapreduce_spark.sources.fixtures import load_table, normalize_events_ts
 
 
 def events_stream_schema(ts_type: T.DataType) -> T.StructType:
@@ -88,20 +127,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_type = events_ts_layout(spark, f"{sf_dir}/events.parquet")
     return normalize_events_ts(
         table_stream(spark, sf_dir, "events", events_stream_schema(ts_type))
-    )
-
-
-def hourly_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Incremental tumbling-window aggregation with a late-data watermark.
-    In append mode only windows older than the watermark emit (exactly
-    the late-data semantics the reference cannot express)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").start.alias("wstart"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.expr(f"CAST(SUM({_dec('value')}) AS DOUBLE)").alias("sum_value"),
-        )
     )
 
 
@@ -276,34 +301,11 @@ def streaming_pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: swap ``readStream.parquet`` for the Kafka source and nothing
     downstream changes; state is one row per source, and the regex work
-    is codegen'd map-side exactly as in the batch operator."""
-    from golang_mapreduce_spark.operators.pii import PII_EMAIL, PII_ID, PII_PHONE, _augmented
-
+    is codegen'd map-side: both run ``pii.pii_source_rates``."""
     docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
-    t = docs.select("source", _augmented().alias("t"))
-    n_email = F.regexp_count(F.col("t"), F.lit(PII_EMAIL))
-    n_phone = F.regexp_count(F.col("t"), F.lit(PII_PHONE))
-    n_id = F.regexp_count(F.col("t"), F.lit(PII_ID))
-    any_hit = ((n_email + n_phone + n_id) > 0).cast("long")
-    agg = (
-        t.select(
-            "source",
-            n_email.alias("e"),
-            n_phone.alias("p"),
-            n_id.alias("i"),
-            any_hit.alias("a"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("e").cast("bigint").alias("email_hits"),
-            F.sum("p").cast("bigint").alias("phone_hits"),
-            F.sum("i").cast("bigint").alias("id_hits"),
-            F.sum("a").cast("bigint").alias("docs_with_pii"),
-            F.round(F.sum("a") / F.count("*"), 6).alias("pii_rate"),
-        )
+    return run_stream_to_batch(
+        pii_source_rates(docs), spark, state_partitions=BOUNDED_STATE_PARTITIONS
     )
-    return run_stream_to_batch(agg, spark, state_partitions=BOUNDED_STATE_PARTITIONS)
 
 
 # --- driver-contract queries -------------------------------------------
@@ -311,10 +313,12 @@ def streaming_pii_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling_hourly query executed through Structured Streaming
     end-to-end (file stream → stateful window agg → memory sink); its
-    drained output must equal the batch oracle."""
+    drained output must equal the batch oracle.  Complete mode emits
+    every window on every trigger, so a watermark would bound nothing
+    here; streaming_tumbling_append is the watermarked form."""
     events = read_events_stream(spark, sf_dir)
     return run_stream_to_batch(
-        hourly_counts_stream(events),
+        hourly_counts(events),
         spark,
         state_partitions=BOUNDED_STATE_PARTITIONS,
     )
@@ -490,22 +494,12 @@ GROUP BY user_id, session_id
 """
 
 
-def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with watermarks, drained end-to-end:
-    purchases joined to the same user's clicks within the preceding
-    10 minutes.  Inner matches emit as both sides arrive — the
-    watermarks only bound join state (each side buffers at most
-    30 minutes of events), so the drained result equals the batch
-    interval join exactly and the oracle is plain SQL.
-
-    Scale: state is keyed by user and pruned by watermark; the join
-    shuffles both streams on user_id once, identically to the batch
-    plan, but with O(watermark window) memory instead of O(history).
-    State-store partitions sized by :func:`join_state_partitions`
-    (cores/4 — r17; a stream-stream join opens 4 store instances per
-    partition per micro-batch, so the session default paid cores x 4
-    open/commit cycles for watermark-bounded state)."""
-    base = read_events_stream(spark, sf_dir)
+def _purchase_click_join(base: DataFrame, how: str) -> DataFrame:
+    """Purchases joined to the same user's clicks within the preceding
+    10 minutes, each leg watermarked at 30 minutes: the stream-stream
+    join of streaming_click_attribution (``how="inner"``) and
+    streaming_unattributed_purchases (``how="left_outer"``).  Both legs
+    filter on event_type before their watermark."""
     clicks = (
         base.where(F.col("event_type") == "click")
         .select(
@@ -524,12 +518,33 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "30 minutes")
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 10 MINUTES")),
-    ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
+        how,
+    )
+
+
+def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join with watermarks, drained end-to-end:
+    purchases joined to the same user's clicks within the preceding
+    10 minutes.  Inner matches emit as both sides arrive — the
+    watermarks only bound join state (each side buffers at most
+    30 minutes of events), so the drained result equals the batch
+    interval join exactly and the oracle is plain SQL.
+
+    Scale: state is keyed by user and pruned by watermark; the join
+    shuffles both streams on user_id once, identically to the batch
+    plan, but with O(watermark window) memory instead of O(history).
+    State-store partitions sized by :func:`join_state_partitions`
+    (cores/4 — r17; a stream-stream join opens 4 store instances per
+    partition per micro-batch, so the session default paid cores x 4
+    open/commit cycles for watermark-bounded state)."""
+    joined = _purchase_click_join(read_events_stream(spark, sf_dir), "inner").select(
+        "user_id", "purchase_id", "purchase_ts", "click_id", "click_ts"
+    )
 
     return run_stream_to_batch(
         joined,
@@ -626,8 +641,6 @@ def streaming_packed_sequences(
     driver-materialization residue).  The drained output is split-
     invariant: _pack_fn's recurrence depends only on global doc_id order,
     which increasing-range files consumed in mtime order preserve."""
-    from golang_mapreduce_spark.functions.text import ws_words
-    from golang_mapreduce_spark.sources.fixtures import load_table
     from golang_mapreduce_spark.streaming.stateful import pack_with_state
 
     sizes = (
@@ -715,20 +728,6 @@ def kafka_stream_options(
     return opts
 
 
-# oracles identical to the batch queries: a drained stream over the same
-# data must produce the same table.
-from golang_mapreduce_spark.operators.corpus import PACKED_SEQUENCES_SQL  # noqa: E402
-from golang_mapreduce_spark.operators.windows import (  # noqa: E402
-    SESSION_SQL,
-    TUMBLING_SQL,
-)
-
-
-def _pii_rates_oracle() -> str:
-    from golang_mapreduce_spark.operators.pii import PII_RATES_SQL
-
-    return PII_RATES_SQL
-
 def streaming_incremental_triage(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> DataFrame:
@@ -765,15 +764,6 @@ def _triage_base_relations(
     base_sig_p) — read from the stored materialize_dedup_base tables
     when ``base_dir`` is given, else derived from the corpus scan so
     the oracle can replay it."""
-    from golang_mapreduce_spark.operators.dedup import (
-        INGEST_MOD,
-        INGEST_RES,
-        NUM_HASHES,
-        _bands_from,
-        _signatures_from,
-    )
-    from golang_mapreduce_spark.sources.fixtures import load_table
-
     if base_dir is not None:
         base_hash = spark.read.parquet(f"{base_dir}/base_hash")
         base_sig = spark.read.parquet(f"{base_dir}/base_sig")
@@ -810,16 +800,6 @@ def _triage_probe_rows(
     Works identically on a batch or streaming ``incoming`` — both
     drained forms and the watermarked append form share it, so the
     probe semantics cannot drift."""
-    from golang_mapreduce_spark.operators.dedup import (
-        BAND_STRUCT_EXPR,
-        MINHASH_EST_THRESHOLD,
-        NUM_HASHES,
-        _shingles,
-        rowwise_hashes,
-        rowwise_signature,
-    )
-    from golang_mapreduce_spark.functions.text import ws_words
-
     carry_cols = list(carry)
     inc = incoming.select(
         "doc_id",
@@ -885,8 +865,6 @@ def _streaming_triage_frame(
     """The un-drained streaming frame behind
     :func:`streaming_incremental_triage` — exposed so tests can audit
     the pre-execution plan (base text never scanned)."""
-    from golang_mapreduce_spark.operators.dedup import INGEST_MOD, INGEST_RES
-
     base_hash, base_bands, base_sig_p = _triage_base_relations(
         spark, sf_dir, base_dir
     )
@@ -939,8 +917,6 @@ def _append_triage_frame(
     event-time, folded per (1-hour window, doc_id) under a 10-minute
     watermark.  Exposed so the late-data test can drive its own file
     sequence batch-by-batch (max_files=1)."""
-    from golang_mapreduce_spark.operators.dedup import INGEST_MOD, INGEST_RES
-
     base_hash, base_bands, base_sig_p = _triage_base_relations(spark, sf_dir, None)
     stream = (
         spark.readStream.schema(docs_stream_schema())
@@ -1020,27 +996,13 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (drop past the two-batch-lagged watermark, counted in
     numRowsDroppedByWatermark)."""
     with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
-        # append mode must group by the FULL window struct: projecting
-        # .start inside the groupBy detaches the grouping column from
-        # the watermarked event-time column and Spark rejects the plan
-        # (complete-mode hourly_counts_stream can afford the projection)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.expr(f"CAST(SUM({_dec('value')}) AS DOUBLE)").alias("sum_value"),
-            )
-        )
         out = run_stream_to_batch(
-            agg,
+            hourly_counts(stream.withWatermark("ts", "10 minutes")),
             spark,
             output_mode="append",
             state_partitions=BOUNDED_STATE_PARTITIONS,
         )
-    return out.where(F.col("event_type") != "sentinel").select(
-        F.col("w.start").alias("wstart"), "event_type", "n", "sum_value"
-    )
+    return out.where(F.col("event_type") != "sentinel")
 
 
 def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,21 +1023,12 @@ def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered after the drain.  State is one row per OPEN session,
     evicted on emission — O(active users), never O(history)."""
     with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.expr(f"CAST(SUM({_dec('value')}) AS DOUBLE)").alias("sum_value"),
-            )
+        out = run_stream_to_batch(
+            session_counts(stream.withWatermark("ts", "10 minutes")),
+            spark,
+            output_mode="append",
         )
-        out = run_stream_to_batch(agg, spark, output_mode="append")
-    return out.where(F.col("user_id") >= 0).select(
-        "user_id",
-        F.col("session_window.start").alias("session_start"),
-        "n_events",
-        "sum_value",
-    )
+    return out.where(F.col("user_id") >= 0)
 
 
 TRENDING_TOP = 5
@@ -1189,38 +1142,10 @@ def streaming_unattributed_purchases(spark: SparkSession, sf_dir: str) -> DataFr
     on user_id exactly like the inner join; Kafka's live watermark
     replaces the sentinel artifact with nothing else changing."""
     with _sentinel_events_stream(spark, sf_dir, ("click", "purchase")) as base:
-        clicks = (
-            base.where(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-                F.col("event_id").alias("click_id"),
-            )
-            .withWatermark("click_ts", "30 minutes")
-        )
-        purchases = (
-            base.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("user_id"),
-                F.col("ts").alias("purchase_ts"),
-                F.col("event_id").alias("purchase_id"),
-            )
-            .withWatermark("purchase_ts", "30 minutes")
-        )
-        joined = purchases.join(
-            clicks,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (
-                F.col("click_ts")
-                >= F.col("purchase_ts") - F.expr("INTERVAL 10 MINUTES")
-            ),
-            "left_outer",
-        )
         # state stores sized by join_state_partitions (cores/4 — r17,
         # same rationale as streaming_click_attribution)
         out = run_stream_to_batch(
-            joined,
+            _purchase_click_join(base, "left_outer"),
             spark,
             output_mode="append",
             state_partitions=join_state_partitions(spark),
@@ -1258,8 +1183,6 @@ def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless map + one keyed running aggregate of bounded
     cardinality; swap the file source for Kafka and nothing downstream
     changes."""
-    from golang_mapreduce_spark.operators.textstats import quality_features
-
     docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     q = quality_features(docs, keep=("source",))
     agg = q.groupBy("source").agg(
@@ -1288,24 +1211,13 @@ def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless explode + hash per row, one keyed running
     aggregate of FIXED cardinality (4x1024 BIGINTs) — the smallest
     possible streaming state for a frequency structure; Kafka swap-in
-    changes nothing downstream."""
-    from golang_mapreduce_spark.functions.hashing import hash32
-    from golang_mapreduce_spark.functions.text import ws_words
-    from golang_mapreduce_spark.operators.textstats import CMS_ROWS, CMS_WIDTH
-
+    changes nothing downstream.  The bucket ids are the batch sketch's
+    (``textstats.cms_bucket_ids``); the aggregation differs, because the
+    batch sketch sums per-token partial counts and a complete-mode
+    stream cannot chain two aggregations."""
     docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     toks = docs.select(F.explode(ws_words("text")).alias("tok"))
-    buckets = toks.select(
-        F.posexplode(
-            F.array(
-                *[
-                    (hash32(F.concat(F.col("tok"), F.lit(f"#cms{i}")))
-                     % CMS_WIDTH).cast("int")
-                    for i in range(CMS_ROWS)
-                ]
-            )
-        ).alias("row_i", "bucket")
-    )
+    buckets = toks.select(F.posexplode(cms_bucket_ids()).alias("row_i", "bucket"))
     cells = buckets.groupBy("row_i", "bucket").agg(
         F.count("*").cast("bigint").alias("cell_n")
     )
@@ -1313,9 +1225,6 @@ def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_cms_oracle() -> str:
-    from golang_mapreduce_spark.functions.hashing import sql_hash32
-    from golang_mapreduce_spark.operators.textstats import CMS_ROWS, CMS_WIDTH
-
     rows = "\n  UNION ALL ".join(
         "SELECT {i} AS row_i, ({h} % {w}) AS bucket FROM toks".format(
             i=i, w=CMS_WIDTH, h=sql_hash32("tok || '#cms{}'".format(i))
@@ -1350,40 +1259,16 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge its registers element-wise with these.
 
     Scale: stateless explode + hash per row, one keyed running MAX of
-    fixed cardinality; Kafka swap-in changes nothing downstream."""
-    from golang_mapreduce_spark.functions.hashing import hash32
-    from golang_mapreduce_spark.functions.text import ws_words
-    from golang_mapreduce_spark.operators.textstats import (
-        HLL_BUCKETS,
-        HLL_RANK_CAP,
-    )
-
+    fixed cardinality; Kafka swap-in changes nothing downstream.  Both
+    modes build the registers with ``textstats.hll_registers``."""
     docs = table_stream(spark, sf_dir, "documents", docs_stream_schema())
     toks = docs.select("source", F.explode(ws_words("text")).alias("tok"))
-    h = hash32("tok")
-    w = (h / F.lit(HLL_BUCKETS)).cast("bigint")
-    rank = F.when(w == 0, F.lit(HLL_RANK_CAP)).otherwise(
-        F.lit(HLL_RANK_CAP) - F.length(F.conv(w.cast("string"), 10, 2))
+    return run_stream_to_batch(
+        hll_registers(toks), spark, state_partitions=BOUNDED_STATE_PARTITIONS
     )
-    reg = (
-        toks.select(
-            "source",
-            (h % HLL_BUCKETS).cast("int").alias("bucket"),
-            rank.alias("rank"),
-        )
-        .groupBy("source", "bucket")
-        .agg(F.max("rank").cast("int").alias("m"))
-    )
-    return run_stream_to_batch(reg, spark, state_partitions=BOUNDED_STATE_PARTITIONS)
 
 
 def _streaming_hll_oracle() -> str:
-    from golang_mapreduce_spark.functions.hashing import sql_hash32
-    from golang_mapreduce_spark.operators.textstats import (
-        HLL_BUCKETS,
-        HLL_RANK_CAP,
-    )
-
     return """
 WITH toks AS (
   SELECT source,
@@ -1423,7 +1308,6 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle, and versions are table-format snapshots instead of
     directories; per-batch cost is O(batch + touched partitions), never
     O(history replayed)."""
-    import os
     from glob import glob as _glob
 
     from pyspark.sql.window import Window
@@ -1504,8 +1388,6 @@ FROM (
 
 
 def _streaming_quality_oracle() -> str:
-    from golang_mapreduce_spark.operators.textstats import QUALITY_SQL
-
     return f"""
 WITH q AS (
   {QUALITY_SQL.strip()}
@@ -1522,11 +1404,6 @@ GROUP BY d.source
 
 
 def _streaming_triage_oracle() -> str:
-    from golang_mapreduce_spark.operators.dedup import (
-        INCREMENTAL_TRIAGE_SQL,
-        minhash_pairs_sql,
-    )
-
     return INCREMENTAL_TRIAGE_SQL.format(PAIRS=minhash_pairs_sql("documents").strip())
 
 
@@ -1563,7 +1440,7 @@ ORACLES = {
     "streaming_unattributed_purchases": UNATTRIBUTED_PURCHASES_SQL,
     "streaming_dedup": STREAMING_DEDUP_SQL,
     "streaming_packed_sequences": PACKED_SEQUENCES_SQL,
-    "streaming_pii_rates": _pii_rates_oracle(),
+    "streaming_pii_rates": PII_RATES_SQL,
     "streaming_incremental_triage": _streaming_triage_oracle(),
     # the append-mode emission log, fully finalized, equals the same
     # batch triage table — one oracle certifies both output modes

@@ -115,6 +115,7 @@ def test_decontaminate_benchmark_side_broadcasts(spark, sf_dir):
 
 
 @pytest.mark.slow
+@pytest.mark.streaming
 def test_streaming_dedup_absorbs_duplicate_delivery(spark, sf_dir):
     """The drained per-type totals from the duplicated source equal the
     single-copy batch aggregation (exactly-once downstream of an

@@ -13,11 +13,9 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from golang_mapreduce_spark.operators.windows import hourly_counts
 from golang_mapreduce_spark.sources.fixtures import load_table
-from golang_mapreduce_spark.streaming.jobs import (
-    hourly_counts_stream,
-    read_events_stream,
-)
+from golang_mapreduce_spark.streaming.jobs import read_events_stream
 from golang_mapreduce_spark.streaming.metrics import ProgressCollector, observed
 
 pytestmark = pytest.mark.streaming
@@ -49,10 +47,9 @@ def test_streaming_progress_collector_accumulates(spark, sf_dir):
     collector = ProgressCollector()
     spark.streams.addListener(collector)
     try:
-        # hourly_counts_stream groups on window.start (complete-mode
-        # shape); observe() sits downstream of the aggregation and
+        # observe() sits downstream of the hourly aggregation and
         # reports the emitted-window metrics per micro-batch
-        agg = hourly_counts_stream(read_events_stream(spark, sf_dir)).observe(
+        agg = hourly_counts(read_events_stream(spark, sf_dir)).observe(
             "emitted_windows",
             F.count(F.lit(1)).alias("rows"),
             F.sum("n").alias("events_in_windows"),

@@ -11,11 +11,9 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from golang_mapreduce_spark.operators.windows import hourly_counts
 from golang_mapreduce_spark.session import rocksdb_state_conf
-from golang_mapreduce_spark.streaming.jobs import (
-    hourly_counts_stream,
-    read_events_stream,
-)
+from golang_mapreduce_spark.streaming.jobs import read_events_stream
 
 pytestmark = pytest.mark.streaming
 
@@ -41,7 +39,7 @@ def test_rocksdb_provider_live_equals_batch(spark, sf_dir):
     for k, v in rocksdb_state_conf().items():
         spark.conf.set(k, v)
     try:
-        agg = hourly_counts_stream(read_events_stream(spark, sf_dir))
+        agg = hourly_counts(read_events_stream(spark, sf_dir))
         name = "rocks_" + uuid.uuid4().hex[:10]
         q = (
             agg.writeStream.format("memory")

@@ -346,6 +346,7 @@ def test_clip_calibration_bounds_and_mass(spark, sf_dir):
         assert 0.0 <= r["clipped_frac"] <= 0.02
 
 
+@pytest.mark.streaming
 def test_streaming_trending_ranks_are_dense_and_ordered(spark, sf_dir):
     from golang_mapreduce_spark.streaming.jobs import (
         TRENDING_TOP,

@@ -12,11 +12,14 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from golang_mapreduce_spark.operators.windows import hourly_counts
 from golang_mapreduce_spark.streaming import jobs as sj
 
 
+@pytest.mark.streaming
 def test_bounded_state_drain_restores_conf_and_result(spark, sf_dir):
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -52,6 +55,7 @@ def test_bounded_state_drain_restores_conf_and_result(spark, sf_dir):
     assert spark.conf.get(key) == before
 
 
+@pytest.mark.streaming
 def test_run_stream_to_batch_never_raises_parallelism(spark, sf_dir):
     """A session benching at fewer cores than BOUNDED_STATE_PARTITIONS
     must keep its own (smaller) partition count: the cap only ever
@@ -61,7 +65,7 @@ def test_run_stream_to_batch_never_raises_parallelism(spark, sf_dir):
     before = spark.conf.get(key)
     events = sj.read_events_stream(spark, sf_dir)
     out = sj.run_stream_to_batch(
-        sj.hourly_counts_stream(events),
+        hourly_counts(events),
         spark,
         state_partitions=10_000,  # larger than the session's 8
     )

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import inspect
 
+import pytest
+
 from golang_mapreduce_spark.streaming import jobs
 
 
@@ -59,6 +61,7 @@ def test_bounded_drain_conf_window_is_locked():
     assert isinstance(jobs._CONF_OVERRIDE_LOCK, type(threading.Lock()))
 
 
+@pytest.mark.streaming
 def test_join_drain_state_partitions_result_identical(spark, sf_dir):
     """r17: the stream-stream join drains run their state stores at
     join_state_partitions (cores/4) — the drained result must be

@@ -4,6 +4,7 @@ stats, and the closed-form sliding-chunk manifest."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.operators.corpus import (
@@ -146,6 +147,7 @@ def test_source_sketch_is_merged_doc_sketch(spark, sf_dir):
         assert round(r["est_jaccard"], 6) == est[(r["source_a"], r["source_b"])]
 
 
+@pytest.mark.streaming
 def test_tumbling_append_equals_batch(spark, sf_dir):
     """The finalized append-mode log equals the batch tumbling table
     row-for-row (same windows, counts, and decimal-quantized sums) and
@@ -238,6 +240,7 @@ def test_quality_by_dup_class_partitions_corpus(spark, sf_dir):
         assert r["min_quality"] <= r["avg_quality"] <= r["max_quality"]
 
 
+@pytest.mark.streaming
 def test_session_append_equals_batch(spark, sf_dir):
     """The finalized native-session append log equals the batch
     session_windows_30m table, with no sentinel residue."""

@@ -8,6 +8,7 @@ complement of the inner one."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from golang_mapreduce_spark.operators.sampling import (
@@ -95,6 +96,7 @@ def test_weighted_reservoir_is_deterministic_and_weight_biased(spark, sf_dir):
     assert sample_mean > corpus_mean
 
 
+@pytest.mark.streaming
 def test_outer_join_is_exact_complement_of_inner(spark, sf_dir):
     """unattributed ∪ attributed = all purchases, disjointly: the
     left-outer stream-stream join's null side must be exactly the

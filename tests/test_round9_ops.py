@@ -349,6 +349,7 @@ def test_power_iteration_unit_norm_and_deterministic(spark, sf_dir):
     assert [r["component"] for r in rows] == [r["component"] for r in again]
 
 
+@pytest.mark.streaming
 def test_streaming_cms_cells_equal_batch_sketch(spark, sf_dir):
     """The incrementally maintained cells must be value-identical to the
     batch sketch's cells (map-side-combine equivalence), and cell mass
@@ -377,6 +378,7 @@ def test_streaming_cms_cells_equal_batch_sketch(spark, sf_dir):
     assert direct == probe["cell_n"]
 
 
+@pytest.mark.streaming
 def test_streaming_upsert_snapshot_is_last_writer_wins(spark, sf_dir):
     """The final foreachBatch snapshot holds exactly one row per user —
     the latest event by (ts, event_id) — even though each user's events
@@ -478,6 +480,7 @@ def test_fuzzy_key_join_blocking_is_exact_at_distance_one(spark, sf_dir):
     assert all(r["distance"] == 1 for r in rows)
 
 
+@pytest.mark.streaming
 def test_streaming_hll_registers_equal_batch_sketch(spark, sf_dir):
     """Drained incremental registers are value-identical to the batch
     HLL registers (MAX is mergeable), and every register respects the
@@ -615,6 +618,7 @@ def test_conversion_latency_quantiles_sane(spark, sf_dir):
 
 # --- r10 carryovers ---------------------------------------------------------
 
+@pytest.mark.streaming
 def test_attribution_models_reconcile_with_click_join(spark, sf_dir):
     """n_attributed equals the distinct purchases in the inner
     attribution join; agreement is a proper rate; purchases with exactly

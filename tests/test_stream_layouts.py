@@ -4,7 +4,8 @@ The shipped fixtures hold each table as one ``{table}.parquet`` file;
 ``tools/scalegen`` writes Spark directories of part files instead.  Each
 ``streaming/jobs.QUERIES`` drain runs over a k=2 scalegen copy of the
 test fixture and must equal its ``ORACLES`` SQL, which DuckDB runs over
-the same directories.
+the same directories.  So do the batch queries whose transformation a
+drain shares.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import os
 
 import pytest
 
+import __spark_entry__ as entry_mod
 from golang_mapreduce_spark.streaming import jobs
 from golang_mapreduce_spark.tools import scalegen
 from tests.oracle import compare, duck_connection
@@ -36,7 +38,23 @@ def scaled_con(scaled_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(jobs.QUERIES))
+#: every drain, and each batch query that shares its transformation with
+#: a drain
+NAMES = sorted(jobs.QUERIES) + [
+    "tumbling_hourly",
+    "session_windows_30m",
+    "pii_rates",
+    "cms_heavy_hitters",
+    "hll_distinct_by_source",
+]
+
+
+@pytest.mark.parametrize("name", NAMES)
 def test_drain_equals_oracle_on_directory_tables(spark, scaled_dir, scaled_con, name):
-    compare(jobs.QUERIES[name](spark, scaled_dir), scaled_con, jobs.ORACLES[name], name)
+    compare(
+        entry_mod.queries()[name](spark, scaled_dir),
+        scaled_con,
+        entry_mod.oracle_sql()[name],
+        name,
+    )
     spark.catalog.clearCache()
