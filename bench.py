@@ -20,17 +20,27 @@ payload go to the BENCH_DETAIL.json sidecar instead
 Each query is forced end-to-end with a noop write (full computation, no
 driver-side collection cost).
 
+Every benched name is timed in K = 3 interleaved passes: HEADLINE, then
+EXTRA, then the 10x BIG_QUERIES as ``big:<name>``, and pass p times every
+name before pass p+1 starts.  A host stall or a first-touch warmup then
+lands in one reading of a name, not in all of them.  ``queries``,
+``queries_extra`` and ``queries_big_scale["queries"]`` report each name's
+median of K; BENCH_DETAIL.json ``passes`` keeps the K readings in pass
+order, so the cold first pass stays visible.  The regression gate runs
+once, on the medians.  A run costs about K full passes of the suite
+(the earlier single cold pass plus warm retries cost ~1.5-1.8).
+
 Env knobs: SPARK_GRAFT_SKIP_BIG=1 skips the 10x section;
-SPARK_GRAFT_UPDATE_BASELINE=1 merges this run's per-query minima into
+SPARK_GRAFT_UPDATE_BASELINE=1 merges this run's per-query medians into
 bench_baseline.json (quiet runs only — never under driver load);
-SPARK_GRAFT_BENCH_STRICT=1 exits nonzero if the gate still flags after
-warm retries.
+SPARK_GRAFT_BENCH_STRICT=1 exits nonzero if the gate flags.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -334,16 +344,6 @@ EXTRA = [
 ]
 
 
-#: Benched names that do not yet have a bench_baseline.json best_sec.
-#: tests/test_bench_gate.py pins that NO name outside this set lacks a
-#: baseline — the set exists to shrink: the round-10 quiet best-of-N
-#: seeding run empties it, and any future op must either get a seed or
-#: be listed here explicitly (no silent gate holes).
-PENDING_BASELINE_SEED: set[str] = set()
-# (emptied at the round-15 close: ivf_mass_recall_curve seeded 1.918
-# quiet best-of-5 at sf0.1 and 2.289 at 10x — SCALE.md r15 close)
-
-
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -466,10 +466,9 @@ BIG_QUERIES = [
 ]
 
 
-def run_big_scale(spark, queries, sf_dir: str, sf) -> dict:
-    """Generate-if-absent the 10x dataset and time BIG_QUERIES there.
-    Soft-fails (returns {'error': ...}) so the headline JSON always
-    prints."""
+def generate_big_scale(spark, sf_dir: str, sf) -> dict:
+    """Generate-if-absent the 10x dataset for BIG_QUERIES.  Soft-fails
+    (returns {'error': ...}) so the headline JSON always prints."""
     import tempfile
 
     from golang_mapreduce_spark.tools import scalegen
@@ -481,19 +480,49 @@ def run_big_scale(spark, queries, sf_dir: str, sf) -> dict:
     try:
         t0 = time.perf_counter()
         scalegen.generate(spark, sf_dir, big_dir, k=BIG_SCALE_K)
-        gen_sec = round(time.perf_counter() - t0, 3)
-        out: dict = {}
-        for name in BIG_QUERIES:
-            out[name] = timed(spark, queries[name], big_dir)
         return {
             "sf": (sf * BIG_SCALE_K if isinstance(sf, float) else sf),
             "dir": big_dir,
-            "gen_sec": gen_sec,
-            "queries": out,
-            "total": round(sum(out.values()), 3),
+            "gen_sec": round(time.perf_counter() - t0, 3),
         }
     except Exception as e:  # noqa: BLE001 - diagnostic surface
         return {"error": repr(e)[:300]}
+
+
+#: Interleaved timing passes per benched name; every reported number is
+#: the median of K readings.
+K = 3
+
+
+def time_passes(spark, jobs: dict) -> tuple[dict[str, list[float]], str | None]:
+    """Time every job in K interleaved passes and return (name -> its K
+    readings in pass order, the 10x section's error or None).
+
+    ``jobs`` maps name -> (query fn, data dir), in timing order.  Pass p
+    times every name before pass p+1 starts.  A ``big:`` query that
+    raises drops the whole 10x section (its readings and its remaining
+    timings), like a failed 10x generation, so the headline line still
+    prints; any other query's error propagates."""
+    passes: dict[str, list[float]] = {name: [] for name in jobs}
+    big_error = None
+    for _ in range(K):
+        for name, (fn, qdir) in jobs.items():
+            if big_error and name.startswith("big:"):
+                continue
+            try:
+                passes[name].append(timed(spark, fn, qdir))
+            except Exception as e:  # noqa: BLE001 - the 10x section soft-fails
+                if not name.startswith("big:"):
+                    raise
+                spark.catalog.clearCache()
+                big_error = repr(e)[:300]
+    if big_error:
+        passes = {n: v for n, v in passes.items() if not n.startswith("big:")}
+    return passes, big_error
+
+
+def medians(passes: dict[str, list[float]]) -> dict[str, float]:
+    return {name: round(statistics.median(v), 3) for name, v in passes.items()}
 
 
 #: Per-query regression gate.  Absolute wall-clock swings uniformly with
@@ -512,12 +541,11 @@ def run_big_scale(spark, queries, sf_dir: str, sf) -> dict:
 #: regression ever caught (fixed-centroid quadratic, single-partition
 #: sorts) exceeded 2x.  1.5 keeps one-sided headroom for detection
 #: without flagging a dozen plan-identical queries per bursty run.
+#: The gate reads each name's median of K passes, once per run.
 REGRESSION_THRESHOLD = 1.5
 
 
 def regression_check(timings: dict[str, float]) -> dict:
-    import statistics
-
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "bench_baseline.json")
     try:
@@ -539,29 +567,11 @@ def regression_check(timings: dict[str, float]) -> dict:
         for k, r in ratios.items()
         if r / env_factor > REGRESSION_THRESHOLD
     }
-    out = {
+    return {
         "checked": True,
         "env_factor": round(env_factor, 3),
         "flagged": flagged,
     }
-    # A real plan regression moves ONE query against the suite; a median
-    # env under-estimate (shuffle-light queries degrade more than the
-    # median query under load) moves a COHORT just past the threshold
-    # together.  The round-13 closing gate flagged 8 queries inside a
-    # 0.04-wide normalized band (all adjudicated spurious by the quiet
-    # best-of-5), and the DRIVER's r13 gate flagged exactly 3 inside a
-    # 0.028 band — the case the original >=4-flag global-spread form
-    # missed (VERDICT r13 #3).  So: >= 3 flags whose normalized ratios
-    # sit within any single 0.1-wide band => annotate.  Clustering (a
-    # sorted sliding window) instead of global max-min also keeps one
-    # genuine ~2.5x regression co-occurring with a noise band from
-    # suppressing the annotation (ADVICE r13).
-    norm = sorted(v["normalized_ratio"] for v in flagged.values())
-    for i in range(len(norm) - 2):
-        if norm[i + 2] - norm[i] < 0.1:
-            out["uniform_band_suspect"] = True
-            break
-    return out
 
 
 #: Hard budget for the single driver-visible JSON line.  The driver's
@@ -574,11 +584,10 @@ def final_line(total, timings, extra, big, gate, sf) -> dict:
     """The compact driver-facing payload: headline per-query timings
     (the frozen 26-query list — comparable r1..rN), suite totals, and a
     gate SUMMARY (counts + up to 5 names).  Everything else lives in
-    BENCH_DETAIL.json."""
+    BENCH_DETAIL.json.  ``retried``/``n_retried`` stay for the driver's
+    parser; nothing is re-timed any more, so a bench run reports [] / 0."""
     flagged = sorted(gate.get("flagged", {}))
     retried = gate.get("retried", [])
-    if isinstance(retried, bool):  # tolerate the legacy bool form
-        retried = ["(warm retries ran)"] if retried else []
     payload = {
         "metric": "headline_suite_total",
         "value": total,
@@ -599,8 +608,8 @@ def final_line(total, timings, extra, big, gate, sf) -> dict:
         },
         "detail": "BENCH_DETAIL.json",
     }
-    # n_flagged/n_retried always count the FULL final post-retry sets;
-    # the name lists are truncated to fit FINAL_LINE_BUDGET.  Say so
+    # n_flagged/n_retried always count the FULL sets; the name lists
+    # are truncated to fit FINAL_LINE_BUDGET.  Say so
     # explicitly when truncation happened (VERDICT r16 #4: "n_flagged:
     # 22" next to a 5-name list read as an inconsistency) — the full
     # lists are always in BENCH_DETAIL.json.
@@ -609,87 +618,9 @@ def final_line(total, timings, extra, big, gate, sf) -> dict:
     return payload
 
 
-def apply_warm_retries(
-    all_timings: dict[str, float],
-    timings: dict[str, float],
-    extra: dict[str, float],
-    big: dict,
-    retime,
-) -> dict:
-    """Self-heal loop with a FIXPOINT over the gate recomputation
-    (VERDICT r15 #1).  Single-shot timings carry 1.5-2x first-run warmup
-    noise on complex plans (measured: pq_adc_topk 5.6s cold -> 3.6s warm
-    on identical code), so flagged queries are re-timed warm and the
-    better number kept — real plan regressions survive the retry, warmup
-    artifacts do not.  The old form retried only the FIRST gate's
-    flagged set: the retries lower those timings, shift the median
-    env_factor, and the single post-retry recomputation could flip
-    borderline queries into the flagged set with cold single-shot
-    readings that never got their warm retry (the r15 driver gate
-    reported four such flags, including the scan-bound control).  The
-    retry -> recompute loop iterates until every flagged name has had
-    its warm retry (or proven unretryable); a name is warm-retried at
-    most once, so the loop terminates in <= len(all_timings) passes
-    (ADVICE r16: the old max_passes=2 bound could leave a second-
-    recompute flag reported as a cold single-shot reading).
-
-    ``retime(name)`` re-times one query warm and returns the best
-    observed seconds, or ``None`` when the query cannot be re-run (the
-    big section errored/skipped) — such names go to a skip set so they
-    are attempted once, and any of them still flagged at the end are
-    listed in ``gate["unretried_flags"]``.  Returns the final gate dict
-    with ``retried`` set; mutates the three timing dicts in place so
-    callers re-derive their totals."""
-    retried: list[str] = []
-    unretryable: set[str] = set()
-    gate = regression_check(all_timings)
-    for _ in range(len(all_timings) + 1):
-        to_retry = [
-            n for n in sorted(gate["flagged"])
-            if n not in retried and n not in unretryable
-        ]
-        if not to_retry:
-            break
-        for name in to_retry:
-            warm = retime(name)
-            if warm is None:
-                # big section errored/skipped; nothing to retry — skip
-                # permanently instead of re-attempting every pass
-                unretryable.add(name)
-                continue
-            retried.append(name)
-            all_timings[name] = min(all_timings[name], warm)
-            # report the warm number: the cold first run measures
-            # startup noise, not the plan (the gate already proved the
-            # warm run is the representative one)
-            qname = name.removeprefix("big:")
-            if name.startswith("big:"):
-                big["queries"][qname] = all_timings[name]
-            elif qname in timings:
-                timings[qname] = all_timings[name]
-            elif qname in extra:
-                extra[qname] = all_timings[name]
-        if big.get("queries"):
-            big["total"] = round(sum(big["queries"].values()), 3)
-        gate = regression_check(all_timings)
-    # per-query retry visibility (VERDICT r8 #5): the gate names exactly
-    # which readings came from the warm best-of-3 path, so a post-retry
-    # flag is distinguishable from a first-reading flag without a re-run.
-    # An empty list means every reported number is the cold first reading.
-    gate["retried"] = sorted(retried)
-    # flags whose reading never got a warm retry (retime() returned
-    # None — big section errored/skipped), kept distinct so readers
-    # know these are cold single-shot numbers (ADVICE r16)
-    unretried = sorted(set(gate["flagged"]) & unretryable)
-    if unretried:
-        gate["unretried_flags"] = unretried
-    return gate
-
-
 def update_baseline(all_timings: dict[str, float]) -> None:
-    """Merge this run's per-query minima into bench_baseline.json
-    (including big: entries, so the 10x section gets warm recorded
-    bests instead of permanent cold-shot ratios).  Opt-in via
+    """Merge this run's per-query medians into bench_baseline.json where
+    they beat the recorded best (including big: entries).  Opt-in via
     SPARK_GRAFT_UPDATE_BASELINE=1 — only meaningful on a quiet machine."""
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "bench_baseline.json")
@@ -744,15 +675,6 @@ def main() -> None:
         force(queries[warm](spark, sf_dir))
     spark.catalog.clearCache()
 
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        timings[name] = timed(spark, queries[name], sf_dir)
-
-    extra: dict[str, float] = {}
-    for name in EXTRA:
-        extra[name] = timed(spark, queries[name], sf_dir)
-
-    total = round(sum(timings.values()), 3)
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
@@ -760,36 +682,31 @@ def main() -> None:
     big = (
         {"skipped": True}
         if os.environ.get("SPARK_GRAFT_SKIP_BIG")
-        else run_big_scale(spark, queries, sf_dir, sf)
+        else generate_big_scale(spark, sf_dir, sf)
     )
-    all_timings = {
-        **timings, **extra,
-        **{f"big:{k}": v for k, v in big.get("queries", {}).items()},
-    }
-    def retime(name: str) -> float | None:
-        """Warm best-of-2 re-timing of one flagged query.
-
-        big: retries run at 10x — they cost real seconds, but skipping
-        them left five cold single-shot numbers flagged "weak" across
-        rounds 2-3 (VERDICT r3 #3).  Two retries because the sandbox's
-        host stalls come in multi-second bursts (see SCALE.md's drift
-        postmortem): a single retry landing inside the same burst still
-        reads 3x+; two bound the gate's false-flag rate without letting
-        a real plan regression through (it survives both)."""
-        qname = name.removeprefix("big:")
-        qdir = big.get("dir") if name.startswith("big:") else sf_dir
-        if qdir is None:
-            return None
-        return min(timed(spark, queries[qname], qdir) for _ in range(2))
-
-    gate = apply_warm_retries(all_timings, timings, extra, big, retime)
+    jobs = {name: (queries[name], sf_dir) for name in HEADLINE + EXTRA}
+    if "dir" in big:
+        jobs.update(
+            {f"big:{n}": (queries[n], big["dir"]) for n in BIG_QUERIES}
+        )
+    passes, big_error = time_passes(spark, jobs)
+    all_timings = medians(passes)
+    timings = {name: all_timings[name] for name in HEADLINE}
+    extra = {name: all_timings[name] for name in EXTRA}
+    if big_error:
+        big = {"error": big_error}
+    elif "dir" in big:
+        big["queries"] = {n: all_timings[f"big:{n}"] for n in BIG_QUERIES}
+        big["total"] = round(sum(big["queries"].values()), 3)
     total = round(sum(timings.values()), 3)
+    gate = regression_check(all_timings)
     if os.environ.get("SPARK_GRAFT_UPDATE_BASELINE"):
         update_baseline(all_timings)
     detail_doc = {
         "queries": timings,
         "queries_extra": extra,
         "queries_big_scale": big,
+        "passes": passes,
         "sf": sf,
         "cpus": cpus,
         "regression_gate": gate,

@@ -4,9 +4,15 @@ proved identical code can time 1.18x slower under load, so the gate
 normalizes by the suite-median ratio before flagging.
 """
 
+import inspect
 import json
+from types import SimpleNamespace
+
+import pytest
 
 import bench
+
+pytestmark = pytest.mark.bench
 
 
 def test_every_registered_query_is_benched():
@@ -27,20 +33,12 @@ def test_every_registered_query_is_benched():
 
 
 def test_every_benched_query_has_a_baseline_or_is_newly_seeded():
-    """The gate can only flag what has a best_sec.  Every benched name
-    must have a baseline entry; names without one must be exactly the
-    current round's still-unseeded additions (tracked here explicitly
-    so the set shrinks to empty at round close and new gaps cannot
-    appear silently)."""
+    """The gate can only flag what has a best_sec: every benched name
+    must have a baseline entry, so a new operator that skips its seed
+    run fails CI instead of leaving the gate blind to it."""
     base = json.load(open("bench_baseline.json"))["best_sec"]
-    unseeded = {
-        n for n in (*bench.HEADLINE, *bench.EXTRA) if n not in base
-    }
-    # round-10 close seeds these via the quiet best-of-N protocol; the
-    # assertion pins that NO OTHER name is missing a baseline
-    assert unseeded <= bench.PENDING_BASELINE_SEED, sorted(
-        unseeded - bench.PENDING_BASELINE_SEED
-    )
+    missing = [n for n in (*bench.HEADLINE, *bench.EXTRA) if n not in base]
+    assert missing == [], missing
 
 
 def test_uniform_drift_not_flagged():
@@ -61,57 +59,6 @@ def test_single_query_regression_flagged_through_drift():
     gate = bench.regression_check(timings)
     assert list(gate["flagged"]) == [victim]
     assert gate["flagged"][victim]["normalized_ratio"] > 1.9
-    # one genuine outlier is NOT a band
-    assert "uniform_band_suspect" not in gate
-
-
-def test_uniform_flag_band_is_called_out():
-    """The round-13 closing-gate shape: most of the suite drifts 1.25x
-    but a shuffle-light cohort degrades ~1.95x together — all six land
-    just past the threshold inside a narrow normalized band.  The gate
-    must mark the cohort as an env-suspect band (every member of the
-    r13 band adjudicated spurious by quiet best-of-5), while a lone
-    genuine regression (above) stays unmarked."""
-    best = json.load(open("bench_baseline.json"))["best_sec"]
-    timings = {k: v * 1.25 for k, v in best.items()}
-    cohort = sorted(best)[:6]
-    for name in cohort:
-        timings[name] = best[name] * 1.25 * 1.56
-    gate = bench.regression_check(timings)
-    assert sorted(gate["flagged"]) == cohort
-    assert gate.get("uniform_band_suspect") is True
-
-
-def test_three_flag_band_is_called_out():
-    """The DRIVER's round-13 gate shape (VERDICT r13 #3): exactly THREE
-    queries flagged inside a 0.028-wide normalized band — the original
-    >=4-flag threshold missed the very case the detector was built for.
-    Three co-moving flags are already the uniform-env signature."""
-    best = json.load(open("bench_baseline.json"))["best_sec"]
-    timings = {k: v * 1.25 for k, v in best.items()}
-    cohort = sorted(best)[:3]
-    for i, name in enumerate(cohort):
-        timings[name] = best[name] * 1.25 * (1.505 + 0.01 * i)
-    gate = bench.regression_check(timings)
-    assert sorted(gate["flagged"]) == sorted(cohort)
-    assert gate.get("uniform_band_suspect") is True
-
-
-def test_band_detection_survives_cooccurring_genuine_regression():
-    """ADVICE r13: the old global max-min spread let ONE genuine ~2.5x
-    regression co-occurring with a noise band widen the spread past 0.1
-    and suppress the annotation exactly when it is most useful.  The
-    sorted-sliding-window clustering must still mark the band."""
-    best = json.load(open("bench_baseline.json"))["best_sec"]
-    timings = {k: v * 1.25 for k, v in best.items()}
-    names = sorted(best)
-    for i, name in enumerate(names[:4]):  # the noise band
-        timings[name] = best[name] * 1.25 * (1.52 + 0.01 * i)
-    victim = names[4]  # the genuine regression
-    timings[victim] = best[victim] * 1.25 * 2.5
-    gate = bench.regression_check(timings)
-    assert victim in gate["flagged"]
-    assert gate.get("uniform_band_suspect") is True
 
 
 def test_final_line_fits_driver_tail_budget():
@@ -132,7 +79,9 @@ def test_final_line_fits_driver_tail_budget():
     gate = {
         "checked": True,
         "env_factor": 1.234,
-        "retried": True,
+        "retried": [
+            f"big:a_rather_long_query_name_number_{i}" for i in range(40)
+        ],
         "flagged": {
             f"big:a_rather_long_query_name_number_{i}": {
                 "sec": 9999.9, "best_sec": 1.0, "normalized_ratio": 9.9,
@@ -144,63 +93,6 @@ def test_final_line_fits_driver_tail_budget():
         bench.final_line(99999.999, timings, extra, big, gate, 0.1)
     )
     assert len(line) <= bench.FINAL_LINE_BUDGET, len(line)
-
-
-def test_warm_retry_reaches_fixpoint(tmp_path, monkeypatch):
-    """VERDICT r15 #1: queries flagged only by the post-retry gate
-    recomputation must ALSO get a warm retry.  Scenario: five queries
-    read 2x cold (flagged pass 1); their warm retries lower the median
-    env_factor from 1.3 to 1.0, which flips a borderline 1.55x query
-    into the flagged set — the old single-recompute form reported it as
-    a cold single-shot flag.  The fixpoint loop must retry it, after
-    which nothing stays flagged and every retried name is recorded."""
-    monkeypatch.setattr(bench.os.path, "dirname", lambda _: str(tmp_path))
-    names = [f"q{i:02d}" for i in range(9)]
-    (tmp_path / "bench_baseline.json").write_text(
-        json.dumps({"best_sec": {n: 1.0 for n in names}})
-    )
-    # ratios: three cold 2.0x bursts, two 1.2x, three 1.0x, one 1.65x
-    # borderline.  Median = 1.2 -> only the 2.0x trio clears 1.5x
-    # normalized; warm retries drop them to 1.0, median falls to 1.0,
-    # and 1.65 flips into the flagged set on the recomputation.
-    timings = dict.fromkeys(names, 1.0)
-    timings.update({"q00": 2.0, "q01": 2.0, "q02": 2.0,
-                    "q03": 1.2, "q04": 1.2, "q08": 1.65})
-    warm = {"q00": 1.0, "q01": 1.0, "q02": 1.0, "q08": 1.0}
-    retimed: list[str] = []
-
-    def retime(name):
-        retimed.append(name)
-        return warm[name]
-
-    gate = bench.apply_warm_retries(timings, timings, {}, {}, retime)
-    assert "q08" in retimed, "newly-flagged query never got a warm retry"
-    assert gate["flagged"] == {}
-    assert gate["retried"] == ["q00", "q01", "q02", "q08"]
-    assert timings["q08"] == 1.0
-
-
-def test_warm_retry_is_once_per_name(tmp_path, monkeypatch):
-    """A genuine plan regression survives its warm retry and stays
-    flagged — the loop must NOT burn passes re-retrying it (a name is
-    warm-retried at most once), and the surviving flag is reported."""
-    monkeypatch.setattr(bench.os.path, "dirname", lambda _: str(tmp_path))
-    names = [f"q{i:02d}" for i in range(9)]
-    (tmp_path / "bench_baseline.json").write_text(
-        json.dumps({"best_sec": {n: 1.0 for n in names}})
-    )
-    timings = {n: 1.0 for n in names}
-    timings["q08"] = 2.5        # real regression: warm retry confirms it
-    calls: list[str] = []
-
-    def retime(name):
-        calls.append(name)
-        return 2.5
-
-    gate = bench.apply_warm_retries(timings, timings, {}, {}, retime)
-    assert calls == ["q08"]
-    assert sorted(gate["flagged"]) == ["q08"]
-    assert gate["retried"] == ["q08"]
 
 
 def test_update_baseline_merges_minima(tmp_path, monkeypatch):
@@ -240,73 +132,8 @@ def test_every_big_query_has_a_big_baseline():
         set(bench.BIG_QUERIES) - names
     )
     best = _json.load(open("bench_baseline.json"))["best_sec"]
-    missing = [
-        n for n in bench.BIG_QUERIES
-        if f"big:{n}" not in best and f"big:{n}" not in bench.PENDING_BASELINE_SEED
-    ]
+    missing = [n for n in bench.BIG_QUERIES if f"big:{n}" not in best]
     assert missing == [], missing
-
-
-def test_warm_retry_fixpoint_runs_past_two_passes(tmp_path, monkeypatch):
-    """VERDICT r16 #4 / ADVICE r16: the old max_passes=2 bound could
-    leave a flag surfaced by the SECOND gate recomputation reported as
-    a cold single-shot reading.  Three-tier synthetic scenario: each
-    retry round lowers the median env_factor enough to flip the next
-    tier into the flagged set (3.0x trio -> 1.85x pair -> 1.55x
-    single); the loop must keep going until every flag had its warm
-    retry and nothing stays flagged."""
-    monkeypatch.setattr(bench.os.path, "dirname", lambda _: str(tmp_path))
-    names = [f"q{i:02d}" for i in range(9)]
-    (tmp_path / "bench_baseline.json").write_text(
-        json.dumps({"best_sec": {n: 1.0 for n in names}})
-    )
-    timings = dict.fromkeys(names, 1.2)
-    timings.update({"q00": 3.0, "q01": 3.0, "q02": 3.0,
-                    "q03": 1.85, "q04": 1.85, "q05": 1.55})
-    retimed: list[str] = []
-
-    def retime(name):
-        retimed.append(name)
-        return 1.0
-
-    gate = bench.apply_warm_retries(timings, timings, {}, {}, retime)
-    # round 1 median 1.85 flags the 3.0 trio; round 2 median 1.2 flags
-    # the 1.85 pair; round 3 median 1.0 flags the 1.55 single
-    assert retimed == ["q00", "q01", "q02", "q03", "q04", "q05"]
-    assert gate["flagged"] == {}
-    assert gate["retried"] == sorted(retimed)
-    assert "unretried_flags" not in gate
-
-
-def test_unretryable_flag_is_skipped_once_and_reported(tmp_path, monkeypatch):
-    """ADVICE r16: a name whose retime() returns None (big section
-    errored/skipped) must go to a skip set — attempted exactly once,
-    not on every pass — and if it is still flagged at the end it is
-    listed in gate["unretried_flags"] so readers know the number is a
-    cold single shot."""
-    monkeypatch.setattr(bench.os.path, "dirname", lambda _: str(tmp_path))
-    names = [f"q{i:02d}" for i in range(9)]
-    (tmp_path / "bench_baseline.json").write_text(
-        json.dumps({"best_sec": {n: 1.0 for n in names}})
-    )
-    timings = dict.fromkeys(names, 1.0)
-    timings["big:q08"] = 2.5
-    del timings["q08"]
-    (tmp_path / "bench_baseline.json").write_text(
-        json.dumps({"best_sec": {**{n: 1.0 for n in names[:8]},
-                                 "big:q08": 1.0}})
-    )
-    calls: list[str] = []
-
-    def retime(name):
-        calls.append(name)
-        return None
-
-    gate = bench.apply_warm_retries(timings, timings, {}, {}, retime)
-    assert calls == ["big:q08"], "unretryable name re-attempted"
-    assert sorted(gate["flagged"]) == ["big:q08"]
-    assert gate["retried"] == []
-    assert gate["unretried_flags"] == ["big:q08"]
 
 
 def test_final_line_gate_counts_match_full_sets():
@@ -330,3 +157,62 @@ def test_final_line_gate_counts_match_full_sets():
     g2 = bench.final_line(1.0, {}, {}, {}, small, 0.1)["gate"]
     assert g2["n_flagged"] == 1 and g2["n_retried"] == 1
     assert "lists_truncated" not in g2
+
+
+def test_gate_reads_the_median_of_k_passes(tmp_path, monkeypatch):
+    """Every benched name is timed in K interleaved passes and gated once,
+    on its median.  A name that reads 8x on the cold pass only is a
+    warmup reading, not a regression; a name at 2x in every pass is.
+    A 10x query that raises drops the 10x section, not the run."""
+    monkeypatch.setattr(bench.os.path, "dirname", lambda _: str(tmp_path))
+    names = [f"q{i:02d}" for i in range(9)]
+    (tmp_path / "bench_baseline.json").write_text(
+        json.dumps({"best_sec": dict.fromkeys(names, 1.0)})
+    )
+    calls: list[str] = []
+
+    def fake_timed(spark, name, qdir):
+        calls.append(name)
+        if name == "q00":
+            return 8.0 if calls.count(name) == 1 else 1.0
+        if name.startswith("big:"):
+            raise RuntimeError("10x OOM")
+        return 2.0 if name == "q01" else 1.0
+
+    monkeypatch.setattr(bench, "timed", fake_timed)
+    passes, big_error = bench.time_passes(None, {n: (n, "sf") for n in names})
+    assert calls == names * bench.K, "pass p must finish before pass p+1"
+    assert big_error is None
+    assert passes["q00"] == [8.0, 1.0, 1.0]
+    assert all(len(v) == bench.K for v in passes.values())
+    gate = bench.regression_check(bench.medians(passes))
+    assert sorted(gate["flagged"]) == ["q01"]
+    assert "time_passes(" in inspect.getsource(bench.main)
+
+    spark = SimpleNamespace(catalog=SimpleNamespace(clearCache=lambda: None))
+    jobs = {"q02": ("q02", "sf"), "big:q02": ("big:q02", "big")}
+    passes, big_error = bench.time_passes(spark, jobs)
+    assert passes == {"q02": [1.0] * bench.K}
+    assert "10x OOM" in big_error
+
+
+def test_final_line_keeps_its_keys():
+    """The driver parses the final line: every top-level and gate key
+    stays, and nothing is re-timed, so the gate reads n_retried 0 and
+    retried []."""
+    best = json.load(open("bench_baseline.json"))["best_sec"]
+    gate = bench.regression_check(best)
+    payload = bench.final_line(
+        1.0, {"wc": 1.0}, {"q2_min_cost_supplier": 1.0}, {"skipped": True},
+        gate, 0.1,
+    )
+    assert set(payload) == {
+        "metric", "value", "unit", "sf", "queries", "extra_total",
+        "extra_n", "big_total", "big_n", "gate", "detail",
+    }
+    assert set(payload["gate"]) == {
+        "checked", "env_factor", "n_retried", "retried", "n_flagged",
+        "flagged",
+    }
+    assert payload["gate"]["n_retried"] == 0
+    assert payload["gate"]["retried"] == []

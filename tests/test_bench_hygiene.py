@@ -13,8 +13,12 @@ must come from the harness after each force.  This pins both halves:
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 from golang_mapreduce_spark.operators import dedup
+
+pytestmark = pytest.mark.bench
 
 
 def _n_persisted(spark) -> int:
@@ -42,21 +46,6 @@ def test_timed_releases_minhash_persists(spark, sf_dir):
     spark.catalog.clearCache()
     bench.timed(spark, dedup.dedup_minhash_pairs, sf_dir)
     assert _n_persisted(spark) == 0
-
-
-def test_gate_retried_is_a_name_list():
-    """Per-query retry visibility (VERDICT r8 #5): the gate's `retried`
-    field is the sorted list of query names whose reported reading came
-    from the warm best-of-3 path — never a bare bool, so BENCH_DETAIL
-    can distinguish first-reading flags from post-retry flags."""
-    import inspect
-
-    # r16 moved the retry loop (and the `retried` bookkeeping) into
-    # apply_warm_retries so the fixpoint logic is unit-testable
-    src = inspect.getsource(bench.apply_warm_retries)
-    assert 'gate["retried"] = sorted(retried)' in src
-    assert 'gate["retried"] = True' not in src
-    assert "apply_warm_retries" in inspect.getsource(bench.main)
 
 
 def test_detail_written_per_cpus_and_fixed_path(tmp_path, monkeypatch):
