@@ -78,270 +78,10 @@ HEADLINE = [
     "salted_join_revenue",
 ]
 
-#: Operators added after round 1 — timed separately so the 26-query
-#: HEADLINE list (and its suite total) stays per-query comparable with
-#: BENCH_r01.
-EXTRA = [
-    "q2_min_cost_supplier",
-    "paragraph_dedup",
-    "simhash_neardup_pairs",
-    "quality_calibrated",
-    "image_resize",
-    "label_centroids",
-    "nearest_centroid_confusion",
-    "hotkey_salted_join_revenue",
-    "ann_recall_at_k",
-    "lsh_rp_topk",
-    "q7_volume_shipping",
-    "q9_product_profit",
-    "q13_customer_distribution",
-    "q16_supplier_counts",
-    "q19_discounted_revenue",
-    "q21_waiting_suppliers",
-    "asof_purchase_click",
-    "range_clicks_before_error",
-    "emb_neardup_pairs",
-    "stateful_sessionize",
-    "clean_corpus",
-    "pq_adc_topk",
-    "bpe_token_stats",
-    "ngram_jaccard_pruned",
-    "hash_sample_docs",
-    "window_range_7day_spend",
-    "decontaminate_docs",
-    "boilerplate_ngrams",
-    "source_mixture_sample",
-    "packed_sequences",
-    "int8_quant_topk",
-    "streaming_dedup",
-    "doc_perplexity",
-    "merge_upsert_orders",
-    "runtime_filtered_join",
-    "resample_gapfill_hourly",
-    "lang_stopword_quality",
-    "ann_ivf_adaptive",
-    "clean_corpus_decontaminated",
-    "streaming_packed_sequences",
-    "pq_residual_topk",
-    "doc_repetition_scores",
-    "image_phash_pairs",
-    "bm25_search",
-    "shuffle_shard_manifest",
-    "ivf_int8_topk",
-    "source_reputation",
-    "doc_perplexity_bigram",
-    "retention_cohorts",
-    "hard_negative_mining",
-    "embedding_dim_stats",
-    "dedup_keep_best",
-    "join_skew_diagnostics",
-    "hourly_anomalies",
-    "training_data_run",
-    "scd2_customer_orders",
-    "embedding_outliers",
-    "neardup_method_agreement",
-    "vocab_topk",
-    "char_trigram_lang_profiles",
-    "mr_indexer",
-    "packing_efficiency",
-    "dup_cluster_histogram",
-    # round-4 additions
-    "balance_langs_sample",
-    "doc_length_histogram",
-    "quality_linear_score",
-    "source_token_concentration",
-    "contamination_rate_by_source",
-    "knn_label_vote",
-    "blob_exact_dedup",
-    "matryoshka_recall",
-    "sentence_stats",
-    "subword_sample_stats",
-    "minhash_calibration",
-    "event_transition_matrix",
-    "temperature_rebalance_sample",
-    # round-5 additions
-    "pii_rates",
-    "pii_redacted_sample",
-    "semantic_dedup_keep",
-    "event_ngram_patterns",
-    "dsir_importance_weights",
-    "source_budget_select",
-    "dedup_normalized",
-    "ngram_novelty_curve",
-    "dedup_incremental_triage",
-    "bpe_fertility_by_lang",
-    "streaming_pii_rates",
-    "dsir_topk_selection",
-    # round-6 additions
-    "approx_distinct_users",
-    "approx_percentile_prices",
-    "training_data_run_semantic",
-    "topic_balanced_select",
-    "source_budget_select_hist",
-    "dup_ngram_fraction",
-    "ngram_containment_pairs",
-    "semantic_drop_by_source",
-    "ivf_cluster_stats",
-    "perplexity_tail_split",
-    "neardup_weighted_sample",
-    "emb_cos_threshold_curve",
-    "quality_drift_by_batch",
-    "streaming_incremental_triage",
-    "streaming_quality_monitor",
-    # round-7 additions
-    "containment_bottomk_pairs",
-    "incremental_triage_materialized",
-    "streaming_triage_append",
-    "gopher_quality_rules",
-    "split_leakage_audit",
-    "minhash_band_stats",
-    "sliding_chunk_stats",
-    "streaming_tumbling_append",
-    "cross_source_dup_matrix",
-    "source_minhash_similarity",
-    "oov_rate_by_lang",
-    "ngram_entropy_by_source",
-    "quality_by_dup_class",
-    "streaming_session_append",
-    # round-8 additions
-    "pipeline_drop_attribution",
-    "decontaminate_bloom",
-    "binary_quant_topk",
-    "pair_review_sample",
-    "seq_len_bucket_histogram",
-    "quant_tier_recall",
-    "dup_graph_degree_stats",
-    "dq_constraint_audit",
-    "snapshot_diff",
-    "bitext_margin_pairs",
-    "neardup_pagerank",
-    "pmi_bigrams",
-    "ann_rank_quality",
-    "kmeans_refine_centroids",
-    "weighted_reservoir_sample",
-    "streaming_unattributed_purchases",
-    "robust_quality_outliers",
-    "dup_span_manifest",
-    # round-9 additions
-    "graph_triangle_counts",
-    "rare_ngram_uniqueness",
-    "normalization_ladder",
-    "char_coverage_audit",
-    "session_funnel_paths",
-    "token_budget_pack_plan",
-    "quality_ablation_matrix",
-    "centroid_drift_by_label",
-    "cms_heavy_hitters",
-    "lang_vocab_overlap",
-    "image_phash_clusters",
-    "embedding_power_iteration",
-    "streaming_cms_cells",
-    "streaming_upsert_snapshot",
-    "hll_distinct_by_source",
-    "user_activity_power_law",
-    "fuzzy_key_join_customers",
-    "streaming_hll_registers",
-    "coreset_kcenter_select",
-    "quality_quantile_normalize",
-    "conversion_latency_quantiles",
-    "attribution_model_compare",
-    "rfm_segments",
-    # round-10 additions
-    "bpe_merge_candidates",
-    "zipf_slope_by_lang",
-    "js_divergence_sources",
-    "decayed_event_counts",
-    "item_cooccurrence_similarity",
-    "graph_kcore_membership",
-    "source_level_split",
-    "benford_price_audit",
-    "embedding_clip_calibration",
-    "streaming_trending_topk",
-    "brand_basket_lift",
-    "doc_keywords_tfidf",
-    "heaps_law_fit",
-    "traffic_seasonality_profile",
-    # round-10 coverage sweep (VERDICT r9 "what's wrong" #1): the 48
-    # registered queries that predate the every-new-op-goes-in-EXTRA
-    # convention and had never been benched — folding them in closes
-    # the regression-gate hole; tests/test_bench_gate.py now asserts
-    # EVERY queries() name is timed (HEADLINE ∪ EXTRA), so the gap
-    # class cannot silently reappear.
-    "streaming_click_attribution",
-    "date_funcs",
-    "knn_numpy_batched",
-    "media_blob_stats",
-    "file_counts",
-    "file_profile",
-    "q4_priority_count",
-    "mr_wc",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "correlated_min_price_parts",
-    "join_left_order_counts",
-    "join_semi_big_spenders",
-    "join_anti_inactive_customers",
-    "agg_rollup_returns",
-    "agg_cube_orders",
-    "distinct_stats",
-    "set_ops_segments",
-    "scalar_funcs",
-    "json_events_typed",
-    "q8_market_share",
-    "q11_important_parts",
-    "q12_late_shipments",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q22_dormant_rich_customers",
-    "q20_promo_suppliers",
-    "dataset_split_counts",
-    "ntile_customer_quartiles",
-    "funnel_conversion",
-    "sliding_10m_5m",
-    "streaming_tumbling_hourly",
-    "emb_neardup_multiprobe",
-    "pq_codes",
-    "lang_doc_stats",
-    "lang_id_heuristic",
-    "token_stats",
-    "bigram_counts",
-    "winnow_fingerprints",
-    "multimodal_join",
-    "image_features",
-    "audio_chunk_features",
-    "video_frame_sample",
-    "grouping_sets_orders",
-    "window_order_gaps",
-    "percentile_prices",
-    "nested_customer_profile",
-    "salted_word_count",
-    # round-11 additions
-    "hapax_richness_by_source",
-    "mutual_information_lang_source",
-    "customer_order_trend",
-    "cohort_ltv_curves",
-    "supplier_hhi_by_nation",
-    "kfold_assignment_audit",
-    "rag_chunk_manifest",
-    "chunk_dup_spectrum",
-    "script_mix_audit",
-    "bot_activity_heuristic",
-    "source_keyness_logodds",
-    "context_length_sensitivity",
-    # round-12 additions
-    "shard_dup_manifest",
-    "crossencoder_rerank_audit",
-    # round-13 additions (IVF retrieve -> cross-encoder rerank composed;
-    # dedup-aware training-shard balance audit)
-    "ivf_ce_retrieval",
-    "training_shard_balance_audit",
-    # round-14 additions (the two tuning tables: IVF probe-budget
-    # recall/scan curve; LSH est-threshold precision/recall sweep)
-    "ivf_probe_recall_curve",
-    "lsh_threshold_sweep",
-    # round-15 addition: the adaptive-mass tuning table
-    "ivf_mass_recall_curve",
-]
+#: Every other registered query, in registry order — timed separately
+#: so the 26-query HEADLINE list (and its suite total) stays per-query
+#: comparable with BENCH_r01.
+EXTRA = [n for n in entry_mod.queries() if n not in HEADLINE]
 
 
 def force(df) -> None:

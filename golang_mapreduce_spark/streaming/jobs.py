@@ -29,6 +29,7 @@ import uuid
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
 from functools import partial
+from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -331,24 +332,21 @@ SENTINEL_TS = (4_102_444_800, 4_133_980_800)
 
 
 def _write_event_sentinel(
-    path: str, ts_sec: int, nanos_layout: bool, event_types: Sequence[str]
+    path: str, ts_sec: int, event_types: Sequence[str]
 ) -> None:
     """One far-future watermark-advancing event per entry of
-    ``event_types`` (event_id -1, -2, ...; user_id -1) in the events
-    file's physical schema (raw int64 nanos or TIMESTAMP(MICROS),
-    matching the fixture generation being streamed)."""
+    ``event_types`` (event_id -1, -2, ...; user_id -1), ts as
+    TIMESTAMP(MICROS).  The sentinel source is read with its own schema,
+    so this need not match the physical ts layout of the fixture it is
+    unioned with."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     n = len(event_types)
-    if nanos_layout:
-        ts_arr = pa.array([ts_sec * 10**9] * n, pa.int64())
-    else:
-        ts_arr = pa.array([ts_sec * 10**6] * n, pa.timestamp("us"))
     table = pa.table(
         {
             "event_id": pa.array([-1 - i for i in range(n)], pa.int64()),
-            "ts": ts_arr,
+            "ts": pa.array([ts_sec * 10**6] * n, pa.timestamp("us")),
             "user_id": pa.array([-1] * n, pa.int64()),
             "event_type": pa.array(list(event_types), pa.string()),
             "value": pa.array([0.0] * n, pa.float64()),
@@ -369,41 +367,30 @@ def _order_by_name(src: str) -> None:
 
 
 @contextmanager
-def _staged_source(
-    sf_dir: str,
-    table: str,
-    copies: int,
+def _sentinel_source(
+    spark: SparkSession,
+    schema: T.StructType,
     sentinels: Sequence[Callable[[str], None]],
-) -> Iterator[tuple[str, int]]:
-    """A temp file-source directory holding ``copies`` copies of one
-    fixture table followed by one file per ``sentinels`` writer, in
-    that admission order.  Either table layout is flattened: a single
-    ``{table}.parquet`` file, or the ``*.parquet`` parts of a
-    Spark-written directory (scalegen outputs).  Yields ``(dir,
-    n_real)`` with n_real the table's file count; callers size
-    ``maxFilesPerTrigger`` from it so a whole copy lands in one
-    micro-batch (real events split across watermarked batches could
-    legitimately drop as late).  The directory is deleted on exit: a
-    terminated drain never reads its source again, and its memory sink
-    keeps the rows."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        parts = [
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        ]
-    else:
-        parts = [path]
-    src = tempfile.mkdtemp(prefix=f"gmrs_{table}_src_")
+) -> Iterator[DataFrame]:
+    """File stream over a temp dir that holds one file per ``sentinels``
+    writer and nothing else, admitted one file per micro-batch in writer
+    order.  Callers union it with a fixture table's :func:`table_stream`,
+    which reads the table in place with no file limit, so micro-batch 1
+    is every real file plus sentinel 1 and each later batch is one more
+    sentinel: real rows never split across watermarked batches, where
+    they could legitimately drop as late.  The directory is deleted on
+    exit: a terminated drain never reads its source again, and its
+    memory sink keeps the rows."""
+    src = tempfile.mkdtemp(prefix="gmrs_sentinel_src_")
     try:
-        for c in range(copies):
-            for i, part in enumerate(parts):
-                shutil.copy(part, os.path.join(src, f"{c:02d}_{i:05d}_{table}.parquet"))
         for j, write in enumerate(sentinels):
-            write(os.path.join(src, f"{copies + j:02d}_sentinel.parquet"))
+            write(os.path.join(src, f"{j:02d}_sentinel.parquet"))
         _order_by_name(src)
-        yield src, len(parts)
+        yield (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
     finally:
         shutil.rmtree(src, ignore_errors=True)
 
@@ -412,8 +399,9 @@ def _staged_source(
 def _sentinel_events_stream(
     spark: SparkSession, sf_dir: str, event_types: Sequence[str]
 ) -> Iterator[DataFrame]:
-    """Events file stream that drains in two micro-batches: all real
-    files plus sentinel A, then sentinel B (:data:`SENTINEL_TS`).  The
+    """Events file stream unioned with two sentinel files
+    (:data:`SENTINEL_TS`, :func:`_sentinel_source`), so it drains in two
+    micro-batches: all real files plus sentinel A, then sentinel B.  The
     watermark is computed at the END of a batch, so batch 1 leaves it
     far-future and batch 2 fires every timeout and emits every
     append-mode row of the real events against it.  Two batches is the
@@ -421,22 +409,13 @@ def _sentinel_events_stream(
     batch's watermark.  Each sentinel file holds one row per
     ``event_types`` entry, user_id -1, for callers to filter after the
     drain."""
-    ts_type = events_ts_layout(spark, f"{sf_dir}/events.parquet")
     sentinels = [
-        partial(
-            _write_event_sentinel,
-            ts_sec=ts,
-            nanos_layout=isinstance(ts_type, T.LongType),
-            event_types=event_types,
-        )
+        partial(_write_event_sentinel, ts_sec=ts, event_types=event_types)
         for ts in SENTINEL_TS
     ]
-    with _staged_source(sf_dir, "events", 1, sentinels) as (src, n_real):
-        yield normalize_events_ts(
-            spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", n_real + 1)
-            .parquet(src)
-        )
+    schema = events_stream_schema(T.TimestampNTZType())
+    with _sentinel_source(spark, schema, sentinels) as marks:
+        yield read_events_stream(spark, sf_dir).unionByName(normalize_events_ts(marks))
 
 
 def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,8 +427,9 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands oracle exactly (hash-checkable), not just the
     sessions closed by a subsequent event.
 
-    Drain shape: micro-batch 1 is all real files plus sentinel A, batch
-    2 is sentinel B, which fires every timeout
+    Drain shape: the events stream is unioned with a sentinel source
+    admitted one file per batch, so micro-batch 1 is all real files plus
+    sentinel A and batch 2 is sentinel B, which fires every timeout
     (:func:`_sentinel_events_stream`).  (Measured at sf0.1: 2 batches at
     session-default partitions ≈ 8 s vs 3 batches ≈ 13 s; do NOT shrink
     shuffle partitions here — ~100k sessions flush through the Python
@@ -589,14 +569,25 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming pipeline (reference analog: the at-least-once task retry +
     idempotent rename in worker.go:156,223 — same contract, record
     granularity instead of task granularity)."""
-    ts_type = events_ts_layout(spark, f"{sf_dir}/events.parquet")
-    with _staged_source(sf_dir, "events", 2, ()) as (src, n_real):
+    path = f"{sf_dir}/events.parquet"
+    ts_type = events_ts_layout(spark, path)
+    parts = sorted(glob(f"{path}/*.parquet")) if os.path.isdir(path) else [path]
+    # one copy of every part per micro-batch: the duplicate delivery is
+    # the point, so unlike the sentinel drains this one stages a copy
+    src = tempfile.mkdtemp(prefix="gmrs_events_src_")
+    try:
+        for c in range(2):
+            for i, part in enumerate(parts):
+                shutil.copy(part, os.path.join(src, f"{c}_{i:05d}_events.parquet"))
+        _order_by_name(src)
         stream = normalize_events_ts(
             spark.readStream.schema(events_stream_schema(ts_type))
-            .option("maxFilesPerTrigger", n_real)
+            .option("maxFilesPerTrigger", len(parts))
             .parquet(src)
         ).withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
         out = drain_available_now(stream, spark)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
     return (
         out.groupBy("event_type")
         .agg(
@@ -910,22 +901,16 @@ def _write_doc_sentinel(path: str, doc_id: int) -> None:
 
 
 def _append_triage_frame(
-    spark: SparkSession, sf_dir: str, src: str, max_files: int
+    spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> DataFrame:
-    """Un-drained watermarked append-mode triage over a prepared source
-    directory: the shared stateless probes carrying a synthetic
-    event-time, folded per (1-hour window, doc_id) under a 10-minute
-    watermark.  Exposed so the late-data test can drive its own file
-    sequence batch-by-batch (max_files=1)."""
+    """Un-drained watermarked append-mode triage over a documents
+    stream: the shared stateless probes carrying a synthetic event-time,
+    folded per (1-hour window, doc_id) under a 10-minute watermark.
+    Exposed so the late-data test can drive its own file sequence
+    batch-by-batch."""
     base_hash, base_bands, base_sig_p = _triage_base_relations(spark, sf_dir, None)
-    stream = (
-        spark.readStream.schema(docs_stream_schema())
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(src)
-        .where(F.col("doc_id") % INGEST_MOD == INGEST_RES)
-        .withColumn(
-            "ts", F.timestamp_seconds(F.lit(TRIAGE_TS_BASE) + F.col("doc_id"))
-        )
+    stream = docs.where(F.col("doc_id") % INGEST_MOD == INGEST_RES).withColumn(
+        "ts", F.timestamp_seconds(F.lit(TRIAGE_TS_BASE) + F.col("doc_id"))
     )
     rows = _triage_probe_rows(
         stream, base_hash, base_bands, base_sig_p, carry=("ts",)
@@ -957,23 +942,21 @@ def streaming_triage_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time (TRIAGE_TS_BASE + doc_id seconds — production: crawl
     time); the fold runs per (1-hour window, doc_id) under a 10-minute
     watermark, so state is bounded by in-flight windows, not corpus
-    size.  The drain appends two far-future sentinel docs (the
-    stateful_sessionize pattern) so every real window finalizes and the
-    emitted log equals the batch triage oracle exactly.
+    size.  The drain unions the documents stream with two far-future
+    sentinel docs admitted one per micro-batch (:func:`_sentinel_source`):
+    batch 1 is every real doc plus sentinel A, whose batch-end watermark
+    is already far-future, so batch 2 (sentinel B) emits every real
+    window and the log equals the batch triage oracle exactly.
 
     Scale: swap the file source for Kafka and the synthetic ts for the
     ingest timestamp; state per trigger is one row per in-flight-window
     doc, evicted on watermark passage."""
     sentinels = [partial(_write_doc_sentinel, doc_id=d) for d in _TRIAGE_SENTINELS]
-    with _staged_source(sf_dir, "documents", 1, sentinels) as (src, n_real):
-        # [all real docs, sentinel A] in micro-batch 1: the watermark
-        # computed at its end is already far-future, so batch 2
-        # (sentinel B) emits every real window — 2 batches, the
-        # stateful_sessionize floor.
+    schema = docs_stream_schema()
+    with _sentinel_source(spark, schema, sentinels) as marks:
+        docs = table_stream(spark, sf_dir, "documents", schema).unionByName(marks)
         out = run_stream_to_batch(
-            _append_triage_frame(spark, sf_dir, src, max_files=n_real + 1),
-            spark,
-            output_mode="append",
+            _append_triage_frame(spark, sf_dir, docs), spark, output_mode="append"
         )
     return out.where(F.col("doc_id") < min(_TRIAGE_SENTINELS))
 
@@ -984,10 +967,12 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once when the watermark passes it) next to
     streaming_tumbling_hourly's complete-mode snapshot; downstream
     time-series stores consume exactly this log.  Drain follows the
-    stateful_sessionize sentinel pattern: [events, sentinel A] in
-    micro-batch 1 computes a far-future watermark at batch end, batch 2
-    (sentinel B) emits every real window — so the finalized log equals
-    the batch tumbling oracle exactly, sentinel windows filtered out.
+    stateful_sessionize sentinel pattern: the events stream unioned with
+    a one-file-per-batch sentinel source puts [events, sentinel A] in
+    micro-batch 1, which computes a far-future watermark at batch end,
+    and batch 2 (sentinel B) emits every real window — so the finalized
+    log equals the batch tumbling oracle exactly, sentinel windows
+    filtered out.
 
     Scale: state is one row per open (window, event_type), evicted on
     watermark passage — O(open windows x types), not O(history); swap
@@ -1016,12 +1001,13 @@ def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window when gap semantics suffice (no Python in the loop —
     the whole pipeline stays JVM-side codegen).
 
-    Drain: the sessionize sentinel pattern (two far-future events;
-    micro-batch 1 is all real files plus sentinel A) finalizes every
-    real session, so the emitted log equals the batch
-    session_windows_30m oracle exactly; sentinel rows (user_id < 0) are
-    filtered after the drain.  State is one row per OPEN session,
-    evicted on emission — O(active users), never O(history)."""
+    Drain: the sessionize sentinel pattern (the events stream unioned
+    with two far-future events admitted one per micro-batch, so batch 1
+    is all real files plus sentinel A) finalizes every real session, so
+    the emitted log equals the batch session_windows_30m oracle exactly;
+    sentinel rows (user_id < 0) are filtered after the drain.  State is
+    one row per OPEN session, evicted on emission — O(active users),
+    never O(history)."""
     with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
         out = run_stream_to_batch(
             session_counts(stream.withWatermark("ts", "10 minutes")),
@@ -1045,12 +1031,13 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never streaming state, which would need complete mode's unbounded
     retention).
 
-    Drain: the sessionize sentinel pattern (two far-future events;
-    micro-batch 1 is all real files plus sentinel A); sentinel rows
-    carry props '{{}}' so their item parses NULL and the post-drain
-    filter drops them.  State is one row per open (window, item) —
-    O(open windows × item vocab), evicted on watermark passage; swap
-    the file source for Kafka and nothing downstream changes."""
+    Drain: the sessionize sentinel pattern (the events stream unioned
+    with two far-future events admitted one per micro-batch, so batch 1
+    is all real files plus sentinel A); sentinel rows carry props '{}'
+    so their item parses NULL and the post-drain filter drops them.
+    State is one row per open (window, item) — O(open windows × item
+    vocab), evicted on watermark passage; swap the file source for Kafka
+    and nothing downstream changes."""
     with _sentinel_events_stream(spark, sf_dir, ("sentinel",)) as stream:
         # NO pre-aggregation row filter: Catalyst pushes filters through
         # the EventTimeWatermark node, so a click-only filter would drop
@@ -1133,8 +1120,10 @@ def streaming_unattributed_purchases(spark: SparkSession, sf_dir: str) -> DataFr
     legs filter on event_type before their watermark, and a
     type='sentinel' row would be filtered out before reaching either
     leg's watermark tracker, so each sentinel file holds one far-future
-    'click' and one far-future 'purchase'; two sentinel batches let the
-    batch-end watermark finalize every real purchase.  Sentinel rows (user_id<0)
+    'click' and one far-future 'purchase'.  The sentinel source is
+    unioned with the events stream and admitted one file per batch, so
+    batch 1 is every real event plus sentinel A and batch 2's batch-end
+    watermark finalizes every real purchase.  Sentinel rows (user_id<0)
     are filtered after the drain.
 
     Scale: state is bounded by the watermark windows on both sides
@@ -1308,8 +1297,6 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle, and versions are table-format snapshots instead of
     directories; per-batch cost is O(batch + touched partitions), never
     O(history replayed)."""
-    from glob import glob as _glob
-
     from pyspark.sql.window import Window
 
     ensure_session_invariants(spark, events=True)
@@ -1325,7 +1312,7 @@ def streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             events_batch.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(f"{halves}/h{i}")
-            part = sorted(_glob(f"{halves}/h{i}/part-*.parquet"))[0]
+            part = sorted(glob(f"{halves}/h{i}/part-*.parquet"))[0]
             shutil.copy(part, os.path.join(src, f"0{i}_events.parquet"))
 
         ts_type = events_ts_layout(spark, os.path.join(src, "00_events.parquet"))

@@ -168,6 +168,7 @@ def test_append_triage_drops_late_document(spark, sf_dir):
         _TRIAGE_SENTINELS,
         _append_triage_frame,
         _write_doc_sentinel,
+        docs_stream_schema,
     )
 
     src = tempfile.mkdtemp(prefix="gmrs_late_triage_")
@@ -199,8 +200,13 @@ def test_append_triage_drops_late_document(spark, sf_dir):
 
     name = "late_triage_" + uuid.uuid4().hex[:8]
     ckpt = tempfile.mkdtemp(prefix="gmrs_ckpt_")
+    docs = (
+        spark.readStream.schema(docs_stream_schema())
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
     q = (
-        _append_triage_frame(spark, sf_dir, src, max_files=1)
+        _append_triage_frame(spark, sf_dir, docs)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
